@@ -47,17 +47,27 @@ object Hashing {
     * the per-element hash maps; an unknown hash falls back to the HOF
     * formulation unchanged (round 21 opt). */
   private[graft] def kindOf(hashFn: Column => Column): Option[String] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-    import org.apache.spark.sql.catalyst.expressions.XxHash64
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, XxHash64}
+    import org.apache.spark.sql.types.BinaryType
     import org.apache.spark.sql.graft.{ColumnBridge, Md5Prefix60}
+    // the kernels hash the raw element, so the hash must take the probe
+    // itself as its argument: a pre-transformed argument (h60(lower(s)))
+    // or an ignored one is unknown and keeps the HOF
+    def isProbe(e: Expression): Boolean = e match {
+      case a: UnresolvedAttribute => a.nameParts == Seq("__hash_probe__")
+      case _ => false
+    }
     ColumnBridge.resolvedExpression(hashFn(col("__hash_probe__"))) match {
-      case Md5Prefix60(_) => Some("h60")
+      case Md5Prefix60(c: Cast) if c.dataType == BinaryType && isProbe(c.child) =>
+        Some("h60")
       // API-built `xxhash64(c)` is an UnresolvedFunction pre-analysis; it
       // resolves to XxHash64 with the default seed 42
       case f: UnresolvedFunction
           if f.nameParts == Seq("xxhash64") && f.arguments.size == 1 &&
-            !f.isDistinct => Some("xx64")
-      case x: XxHash64 if x.children.size == 1 && x.seed == 42L => Some("xx64")
+            isProbe(f.arguments.head) && !f.isDistinct => Some("xx64")
+      case x: XxHash64 if x.children.size == 1 && isProbe(x.children.head) &&
+          x.seed == 42L => Some("xx64")
       case _ => None
     }
   }

@@ -164,7 +164,9 @@ object Prep {
     * so the chunk-embed gate and the passage-grain hybrid's dense leg
     * share ONE transform (and its [[graft.functions.ExprUtils.bindOnce]]
     * guard — CollapseProject would otherwise inline the hash md5 into all
-    * `dim` dimension lambdas). */
+    * `dim` dimension lambdas). Null in, null out: a NULL hash embeds to a
+    * NULL vector (the [[chunkEmbedExprHof]] reference would instead embed
+    * the bare dimension indices, since `concat_ws` skips nulls). */
   def chunkEmbedExpr(hash: org.apache.spark.sql.Column,
                      dim: Int = 16): org.apache.spark.sql.Column = {
     // fused codegen embed (r21 opt): the HOF transform ran `dim`

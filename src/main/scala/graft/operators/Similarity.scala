@@ -799,11 +799,13 @@ object Similarity {
     // whole LSH band/verify pipeline and the exact O(slice²) all-pairs
     // join a second time each. A single full-outer join on the pair key
     // classifies every pair as pred-only / truth-only / hit, and one
-    // keyless aggregate counts all three. Inputs are pair SETS (id_a <
-    // id_b, unique — the contract above), so the counts are identical to
-    // the semi-join form's.
-    val p = pred.select(col("id_a"), col("id_b"), lit(1).as("in_pred"))
-    val t = truth.select(col("id_a"), col("id_b"), lit(1).as("in_true"))
+    // keyless aggregate counts all three. Both inputs are deduplicated on
+    // the pair key first: a key with m pred and n truth rows would
+    // otherwise join into m·n rows and multiply every count.
+    val p = pred.dropDuplicates("id_a", "id_b")
+      .select(col("id_a"), col("id_b"), lit(1).as("in_pred"))
+    val t = truth.dropDuplicates("id_a", "id_b")
+      .select(col("id_a"), col("id_b"), lit(1).as("in_true"))
     def ratio(n: Column, d: Column) =
       roundz(when(d === 0L, lit(0.0))
         .otherwise(n.cast("double") / d.cast("double")), 4)

@@ -930,7 +930,7 @@ object TextAnalysis {
 
   /** The O(terms) stat lookups both served forms share: (N, avgdl, df per
     * term) read from the maintained stats table as driver literals. */
-  private def servedStats(stats: DataFrame, terms: Seq[String])
+  private[graft] def servedStats(stats: DataFrame, terms: Seq[String])
       : (Double, Double, Map[String, Long]) = {
     // ONE driver action (round 21 opt, guide §5 — the driver roundtrip IS
     // the serving latency): the corpus row and the per-term df rows come
@@ -939,9 +939,10 @@ object TextAnalysis {
     // two-action form (corpus head() then df collect()) paid two full
     // stats-log read+aggregate jobs per serve call, and the composed
     // hybrid rows make 2–3 serve calls each. Same values: the corpus row
-    // folds by sum(dl)/sum(nd) exactly as the old keyless aggregate did,
-    // and LexCorpusRow (a -prefixed sentinel) never collides with a
-    // query term.
+    // folds by sum(dl)/sum(nd) exactly as the old keyless aggregate did.
+    // A query term spelled like the LexCorpusRow sentinel shares its group
+    // and keeps the summed df (corpus rows carry df 0), as the two-action
+    // form returned it.
     val rows = stats
       .filter(col("term") === LexCorpusRow || col("term").isin(terms: _*))
       .groupBy("term")
@@ -952,7 +953,7 @@ object TextAnalysis {
         "lexical stats have no corpus row — index empty or not built"))
     val nDocs = corpus.getLong(3)
     val avgdl = corpus.getLong(2).toDouble / nDocs.toDouble
-    val dfMap = rows.filter(_.getString(0) != LexCorpusRow)
+    val dfMap = rows.filter(r => terms.contains(r.getString(0)))
       .map(r => r.getString(0) -> r.getLong(1)).toMap // ≤ |terms| rows
     (nDocs.toDouble, avgdl, dfMap)
   }

@@ -35,12 +35,15 @@ import graft.operators.Components
   *
   * Per-batch work: the batch's endpoint ids are broadcast against the star
   * log (one narrow scan, no state shuffle) to fetch their stored roots;
-  * the root-graph of the batch — O(batch) pairs over RESOLVED roots — is
-  * run through the batch large-star/small-star operator (it converges in
-  * 1-2 rounds on so small a graph); pre-existing losing roots become
-  * relabel entries and every endpoint gets a star row under its final
-  * root. A component
-  * that the batch does not touch is never read, shuffled, or rewritten.
+  * the root graph of the batch — at most one pair per distinct batch pair,
+  * over RESOLVED roots — is collected once and folded by a union-find on
+  * the driver, which links the larger root under the smaller so every
+  * component keeps its minimum as root (the batch operator's fixpoint,
+  * with no per-round jobs). Driver memory is O(distinct batch pairs), the
+  * same bound the endpoint broadcast already places on a batch. Pre-existing
+  * losing roots become relabel entries and every endpoint gets a star row
+  * under its final root. A component that the batch does not touch is
+  * never read, shuffled, or rewritten.
   *
   * Resolution invariant (why stale star rows are safe): a star row stores
   * the id's root AT APPEND TIME. Whenever a then-current root `c` that
@@ -109,6 +112,27 @@ object ComponentsStream {
     dfs.foreach(df => org.apache.spark.sql.graft.DatasetInternals
       .checkpointedRdd(df).foreach(_.unpersist(blocking = false)))
 
+  /** Connected components of a batch's root graph, folded on the driver:
+    * every root that loses a merge, paired with its component minimum —
+    * the (old_root, new_root) fixpoint the batch large/small-star operator
+    * reaches. Ids are ranked by sorting, so linking the larger rank under
+    * the smaller keeps every tree rooted at its component minimum. */
+  private def foldRoots(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val ids = edges.flatMap { case (a, b) => Array(a, b) }.sorted.distinct
+    val parent = Array.tabulate(ids.length)(identity)
+    def find(start: Int): Int = {
+      var i = start
+      while (parent(i) != i) { parent(i) = parent(parent(i)); i = parent(i) }
+      i
+    }
+    edges.foreach { case (a, b) =>
+      val ra = find(java.util.Arrays.binarySearch(ids, a))
+      val rb = find(java.util.Arrays.binarySearch(ids, b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    ids.indices.collect { case i if find(i) != i => (ids(i), ids(find(i))) }.toArray
+  }
+
   /** Fold one micro-batch of undirected pairs into the component state.
     * Returns the number of root-merge events the batch caused (0 on a full
     * replay or a batch of already-linked pairs; a crash-window replay of a
@@ -131,6 +155,7 @@ object ComponentsStream {
     // the star append is the batch's LAST commit — its presence means the
     // whole fold (relabels included) already happened
     if (fs.exists(starsDst)) return 0L
+    import spark.implicits._
 
     val p = pairs
       .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
@@ -174,10 +199,10 @@ object ComponentsStream {
       .join(resolved.select(col("id").as("y"), col("root").as("ry")), Seq("y"))
       .select(col("rx"), col("ry"))
       .filter(col("rx") =!= col("ry"))
-    val (cc, _) = Components.connectedComponentsWithRounds(rootPairs, "rx", "ry")
-    val newRel = cc.select(col("id").as("old_root"), col("component").as("new_root"))
-      .localCheckpoint(true)
-    val merges = newRel.count()
+      .as[(Long, Long)].collect()
+    val losers = foldRoots(rootPairs)
+    val merges = losers.length.toLong
+    val newRel = losers.toSeq.toDF("old_root", "new_root")
 
     // commit 1 (temp-swap): compose the merges into the relabel map.
     // Persist ONLY losing roots that PRE-EXIST in state — stored as some
@@ -230,7 +255,7 @@ object ComponentsStream {
     fs.mkdirs(new org.apache.hadoop.fs.Path(starsPath(stateDir)))
     FsUtils.renameOrThrow(fs, tmpStars, starsDst)
     spark.catalog.refreshByPath(starsPath(stateDir))
-    unpersistCkpts(Seq(p, resolved, newRel) ++ kept)
+    unpersistCkpts(Seq(p, resolved) ++ kept)
     if (autoCompactBytes > 0 && FsUtils.dataBytes(fs,
         new org.apache.hadoop.fs.Path(relabelsPath(stateDir))) > autoCompactBytes)
       compactState(spark, stateDir)

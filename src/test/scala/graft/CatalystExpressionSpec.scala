@@ -217,6 +217,27 @@ class CatalystExpressionSpec extends AnyFunSuite with SparkSuite {
     assert(Hashing.kindOf(c => Hashing.h60(c) * lit(1)).isEmpty)
   }
 
+  test("a hash over a transformed argument is not a known hash: HOF path, " +
+       "same output as the lambda") {
+    import graft.functions.Hashing
+    import spark.implicits._
+    assert(Hashing.kindOf(Hashing.h60 _).contains("h60"))
+    assert(Hashing.kindOf(xxhash64(_)).contains("xx64"))
+    val inner: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+      s => Hashing.h60(lower(s))
+    assert(Hashing.kindOf(inner).isEmpty)
+    assert(Hashing.kindOf(s => xxhash64(concat(s, lit("x")))).isEmpty)
+    assert(Hashing.kindOf(_ => Hashing.h60(lit("k"))).isEmpty)
+    val mod = 1L << 32
+    val r = Seq(Seq("Hello", "World")).toDF("xs").select(
+        Hashing.hashMapped(col("xs"), inner, mod).as("got"),
+        transform(col("xs"), s => pmod(inner(s), lit(mod))).as("hof"),
+        Hashing.hashMapped(col("xs"), Hashing.h60 _, mod).as("raw"))
+      .as[(Seq[Long], Seq[Long], Seq[Long])].head()
+    assert(r._1 == r._2, "inner-wrapped hash must equal its HOF form")
+    assert(r._1 != r._3, "the raw-element kernel would hash the untransformed string")
+  }
+
   test("NbMeanLogOdds / BigramAvgLogp fused scoring ≡ the HOF struct " +
        "formulations (identity-wrapped hash forces the HOF path)") {
     import graft.operators.HashedModel
@@ -245,6 +266,14 @@ class CatalystExpressionSpec extends AnyFunSuite with SparkSuite {
         Prep.chunkEmbedExprHof(h).as("b"))
       .filter(!(col("a") <=> col("b"))).count()
     assert(diff == 0)
+    // null in, null out (the kernel's contract; the HOF diverges here)
+    import spark.implicits._
+    val nulls = Seq(Option.empty[Long], Some(7L)).toDF("h")
+      .select(Prep.chunkEmbedExpr(col("h")).as("a"),
+        Prep.chunkEmbedExprHof(col("h")).as("b"))
+      .as[(Option[Seq[Double]], Option[Seq[Double]])].collect()
+    assert(nulls(0)._1.isEmpty && nulls(0)._2.isDefined)
+    assert(nulls(1)._1.isDefined && nulls(1)._1 == nulls(1)._2)
   }
 
   test("Md5Prefix60 ≡ the hex-string conv formulation on the corpus") {

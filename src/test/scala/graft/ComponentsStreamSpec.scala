@@ -177,4 +177,54 @@ class ComponentsStreamSpec extends AnyFunSuite with SparkSuite {
       .as[(Long, Long)].collect().toMap
     assert(labels == Map(10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
+  private def twinOf(nodes: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] =
+    Components.componentLabels(nodes.toDF("doc_id"), "doc_id",
+      pairs.toDF("a", "b"), "a", "b")
+      .as[(Long, Long)].collect().toMap
+
+  private def labelsOf(dir: String, nodes: Seq[Long]): Map[Long, Long] =
+    ComponentsStream.currentLabels(spark, dir, nodes.toDF("doc_id"), "doc_id")
+      .as[(Long, Long)].collect().toMap
+
+  /** Nodes minus components of `pairs` alone — the merge count a single
+    * batch folded into empty state must report. */
+  private def freshMerges(pairs: Seq[(Long, Long)]): Long = {
+    val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct
+    nodes.size - twinOf(nodes, pairs).values.toSet.size
+  }
+
+  test("a 10-node path in one batch, shuffled ids and flipped directions") {
+    val rnd = new scala.util.Random(11)
+    val ids = rnd.shuffle((1L to 10L).map(_ * 7L)).toSeq
+    val pairs = ids.sliding(2).zipWithIndex.map { case (Seq(u, v), i) =>
+      if (i % 2 == 0) (u, v) else (v, u)
+    }.toSeq
+    val dir = tmpDir("path")
+    val merges = apply(pairs, 0L, dir)
+    assert(merges == 9L && merges == freshMerges(pairs))
+    assert(labelsOf(dir, ids) == twinOf(ids, pairs))
+    assert(labelsOf(dir, ids).values.toSet == Set(7L))
+  }
+
+  test("a descending-id path over batches: pre-existing roots lose") {
+    val ids = (100L to 10L by -10L)
+    val pairs = ids.sliding(2).map { case Seq(u, v) => (u, v) }.toSeq
+    val dir = tmpDir("desc")
+    pairs.grouped(2).zipWithIndex.foreach { case (b, i) => apply(b, i.toLong, dir) }
+    assert(labelsOf(dir, ids) == twinOf(ids, pairs))
+    assert(labelsOf(dir, ids).values.toSet == Set(10L))
+  }
+
+  test("a seeded random graph over five batches equals the batch recompute") {
+    val rnd = new scala.util.Random(20261017)
+    val nodes = (0L until 200L)
+    val pairs = Seq.fill(150)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+    val batches = pairs.grouped(30).toSeq
+    assert(batches.size == 5)
+    val dir = tmpDir("random")
+    val first = apply(batches.head, 0L, dir)
+    assert(first == freshMerges(batches.head))
+    batches.zipWithIndex.tail.foreach { case (b, i) => apply(b, i.toLong, dir) }
+    assert(labelsOf(dir, nodes) == twinOf(nodes, pairs))
+  }
 }

@@ -407,6 +407,21 @@ class LexStatsStreamSpec extends AnyFunSuite with SparkSuite {
     assert(out == direct)
   }
 
+  test("servedStats keeps a query term spelled like the corpus sentinel") {
+    val sentinel = TextAnalysis.LexCorpusRow
+    // two batches' corpus rows plus a pathological token row that sums
+    // into the sentinel's group
+    val stats = Seq((sentinel, 0L, 60L, 6L), (sentinel, 0L, 40L, 4L),
+        (sentinel, 3L, 0L, 0L), ("a", 2L, 0L, 0L), ("b", 5L, 0L, 0L))
+      .toDF("term", "df", "dl", "nd")
+    val (nDocs, avgdl, dfMap) =
+      TextAnalysis.servedStats(stats, Seq("a", sentinel))
+    assert(nDocs == 10.0 && avgdl == 10.0)
+    assert(dfMap == Map("a" -> 2L, sentinel -> 3L))
+    assert(TextAnalysis.servedStats(stats, Seq("a", "b"))._3 ==
+      Map("a" -> 2L, "b" -> 5L))
+  }
+
   test("sync crash window: after the tombstones alone a changed doc " +
        "UNDER-serves (never double-counts); the replay heals to v2") {
     val state = tmp()

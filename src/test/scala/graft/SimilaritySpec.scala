@@ -640,6 +640,12 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     val empty = Similarity.pairEval(pred.filter($"id_a" < 0), truth)
       .as[(Long, Long, Long, Double, Double)].head()
     assert(empty == ((4L, 0L, 0L, 0.0, 0.0)), "empty pred must yield zeros, not NaN")
+    // a duplicated (id_a, id_b) row in either input counts once, never m·n
+    val dup = Similarity.pairEval(
+        pred.union(Seq((1L, 2L), (1L, 2L)).toDF("id_a", "id_b")),
+        truth.union(Seq((1L, 2L)).toDF("id_a", "id_b")))
+      .as[(Long, Long, Long, Double, Double)].head()
+    assert(dup == out, s"duplicates must not multiply the counts: got $dup")
   }
 
   test("lsh_pair_eval gate semantics: verified-LSH precision is exactly 1.0") {
