@@ -104,12 +104,30 @@ object Tables {
     * query stages if `df` contained an exchange — at DataFrame-BUILD time,
     * outside any action. Every call site here (and in [[fanOut]]) passes a
     * bare parquet scan, where the conversion is a cheap split enumeration;
-    * do not call these helpers above a shuffle.
+    * [[requireScanOnly]] rejects any input above a shuffle.
     */
   def keySorted(df: DataFrame, key: String): DataFrame = {
+    requireScanOnly(df, "keySorted")
     val sc = df.sparkSession.sparkContext
     val n = math.max(sc.defaultParallelism, df.rdd.getNumPartitions)
     df.repartitionByRange(n, col(key)).sortWithinPartitions(key)
+  }
+
+  /** The precondition of [[keySorted]] and [[fanOut]], checked: fails fast
+    * when `df`'s plan contains an aggregate, join, repartition, window or
+    * global sort — any operator that plans an exchange, which the helpers'
+    * build-time partition count would eagerly materialize. */
+  private def requireScanOnly(df: DataFrame, caller: String): Unit = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    df.queryExecution.analyzed.collectFirst {
+      case _: Aggregate | _: Distinct | _: Deduplicate => "an aggregate"
+      case _: Join | _: Intersect | _: Except => "a join"
+      case r: Repartition if r.shuffle => "a repartition"
+      case _: RepartitionByExpression | _: RebalancePartitions => "a repartition"
+      case _: Window => "a window"
+      case s: Sort if s.global => "a global sort"
+    }.foreach(op => throw new IllegalArgumentException(
+      s"Tables.$caller needs a scan-only input; its plan contains $op"))
   }
 
   /** Scale-adaptive fan-out for CPU-heavy narrow passes whose downstream is
@@ -159,6 +177,7 @@ object Tables {
     *   check passes). */
   def fanOut(df: DataFrame,
              bytesPerTask: Long = FanOutBytesPerTask): DataFrame = {
+    requireScanOnly(df, "fanOut")
     val p = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val n = bytes

@@ -167,17 +167,23 @@ object Dedup {
     * band ⇒ candidate pair. Returns (band_idx, band_key, id) — grouping by
     * (band_idx, band_key) buckets the corpus.
     */
-  def lshBands(sigs: DataFrame, idCol: String, numPerm: Int, bands: Int): DataFrame = {
+  def lshBands(sigs: DataFrame, idCol: String, numPerm: Int, bands: Int): DataFrame =
+    sigs.select(col(idCol), explode(lshBandKeys(col("sig"), numPerm, bands)).as("band"))
+      .select(col(idCol), col("band.band_idx"), col("band.band_key"))
+
+  /** The LSH band keys of one signature as an `array<struct<band_idx: int,
+    * band_key: long>>` of `bands` entries — the key expression behind
+    * [[lshBands]], shared with the streaming fold so stream state and batch
+    * keys cannot drift apart. */
+  def lshBandKeys(sig: Column, numPerm: Int, bands: Int): Column = {
     val rows = numPerm / bands
     // the signature array is bound once per row; each band hashes its slice
     // (xxhash64 accepts array input directly — no string concat needed)
-    val bandArr = bindOnce(col("sig")) { sig =>
+    bindOnce(sig) { s =>
       transform(sequence(lit(0), lit(bands - 1)), bi =>
         struct(bi.cast("int").as("band_idx"),
-          xxhash64(slice(sig, bi * lit(rows) + lit(1), lit(rows))).as("band_key")))
+          xxhash64(slice(s, bi * lit(rows) + lit(1), lit(rows))).as("band_key")))
     }
-    sigs.select(col(idCol), explode(bandArr).as("band"))
-      .select(col(idCol), col("band.band_idx"), col("band.band_key"))
   }
 
   /** Candidate pairs (id_a < id_b) that collide in at least one LSH band. */

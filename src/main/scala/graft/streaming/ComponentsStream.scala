@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.functions.FsUtils
 import graft.operators.Components
@@ -33,17 +34,21 @@ import graft.operators.Components
   *    into the star log and empties it ([[applyBatch]]'s
   *    `autoCompactBytes` triggers that fold automatically).
   *
-  * Per-batch work: the batch's endpoint ids are broadcast against the star
-  * log (one narrow scan, no state shuffle) to fetch their stored roots;
-  * the root graph of the batch — at most one pair per distinct batch pair,
-  * over RESOLVED roots — is collected once and folded by a union-find on
-  * the driver, which links the larger root under the smaller so every
-  * component keeps its minimum as root (the batch operator's fixpoint,
-  * with no per-round jobs). Driver memory is O(distinct batch pairs), the
-  * same bound the endpoint broadcast already places on a batch. Pre-existing
-  * losing roots become relabel entries and every endpoint gets a star row
-  * under its final root. A component that the batch does not touch is
-  * never read, shuffled, or rewritten.
+  * Per-batch work: the batch's pairs are collected once and deduplicated
+  * on the driver. One narrow scan of the star log against the broadcast
+  * endpoint set returns each endpoint's stored root and whether it
+  * appears as some row's component; one scan of the relabel map returns
+  * the entries that name an endpoint or one of those stored roots.
+  * Everything else runs on the driver: each endpoint's root is resolved, the batch's root graph is
+  * folded by a union-find that links the larger root under the smaller (so
+  * every component keeps its minimum as root — the batch operator's
+  * fixpoint, with no per-round jobs), and each losing root is tested for
+  * pre-existence in state. The star rows are written from a local frame;
+  * the relabel composition runs (distributed) only when a root that
+  * already existed in state loses a merge. Driver memory is O(batch
+  * pairs), the same class of bound the endpoint broadcast already places
+  * on a batch. A component that the batch does not touch is never read,
+  * shuffled, or rewritten.
   *
   * Resolution invariant (why stale star rows are safe): a star row stores
   * the id's root AT APPEND TIME. Whenever a then-current root `c` that
@@ -79,38 +84,43 @@ object ComponentsStream {
   private def starsPath(stateDir: String) = s"$stateDir/stars"
   private def relabelsPath(stateDir: String) = s"$stateDir/relabels"
 
-  private def emptyPairs(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      StructType(Seq(StructField("id", LongType), StructField("component", LongType))))
-  }
-
-  /** Read a state table, recovering a compaction orphan first (same heal
-    * pattern as every log-structured state table in this package). */
-  private def readStateOr(spark: SparkSession, path: String, like: DataFrame): DataFrame = {
-    StateLog.healSwaps(spark, path)
-    if (FsUtils.fs(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.parquet(path)
-    else like.limit(0)
-  }
+  private val StarSchema = StructType(Seq(
+    StructField("id", LongType), StructField("component", LongType)))
+  private val RelabelSchema = StructType(Seq(
+    StructField("old_root", LongType), StructField("new_root", LongType)))
 
   private def readStars(spark: SparkSession, stateDir: String): DataFrame =
-    readStateOr(spark, starsPath(stateDir), emptyPairs(spark))
+    StateLog.readKnownOrEmpty(spark, starsPath(stateDir), StarSchema)
       .select("id", "component") // drop the batch partition column
 
+  /** The relabel map. Joins against it carry NO broadcast hint: the map
+    * is small by design (pre-existing-root merges since compaction,
+    * auto-compacted), so Spark's stats broadcast it anyway — but a forced
+    * hint would pin broadcast even if the map outgrew the threshold
+    * (compaction disabled, merge-storm workload) and OOM the driver
+    * instead of degrading to a shuffle join. */
   private def readRelabels(spark: SparkSession, stateDir: String): DataFrame =
-    readStateOr(spark, relabelsPath(stateDir),
-      emptyPairs(spark).select(col("id").as("old_root"), col("component").as("new_root")))
-      .select("old_root", "new_root")
+    StateLog.readKnownOrEmpty(spark, relabelsPath(stateDir), RelabelSchema)
 
-  /** Unpersist the eager localCheckpoint blocks a fold pinned — without
-    * this a long-running [[runFileStream]] query accumulates checkpoint
-    * blocks in the block manager until driver GC happens to reclaim them
-    * (the same failure class [[graft.operators.Components]] fixed for its
-    * per-round checkpoints). Called after the batch's last commit. */
-  private def unpersistCkpts(dfs: Seq[DataFrame]): Unit =
-    dfs.foreach(df => org.apache.spark.sql.graft.DatasetInternals
-      .checkpointedRdd(df).foreach(_.unpersist(blocking = false)))
+  /** Per key of `keys` that the state table at `path` names in either of
+    * its two columns (a, b): the minimum b over its rows with the key in
+    * a, or None when the key appears only in b. One scan of the table
+    * against the broadcast key set; only matching rows are shuffled and
+    * O(keys) rows reach the driver. Empty when the table does not exist. */
+  private def probe(spark: SparkSession, path: String, schema: StructType,
+                    keys: Iterable[Long]): Map[Long, Option[Long]] = {
+    import spark.implicits._
+    val Array(a, b) = schema.fieldNames
+    StateLog.readKnown(spark, path, schema).filter(_ => keys.nonEmpty).fold(Map.empty[Long, Option[Long]]) {
+      _.select(explode(array(
+          struct(col(a).as("k"), col(b).as("v")),
+          struct(col(b).as("k"), lit(null).cast("long").as("v")))).as("e"))
+        .select("e.k", "e.v")
+        .join(broadcast(keys.toSeq.toDF("k")), Seq("k"), "left_semi")
+        .groupBy("k").agg(min("v").as("v"))
+        .as[(Long, Option[Long])].collect().toMap
+    }
+  }
 
   /** Connected components of a batch's root graph, folded on the driver:
     * every root that loses a merge, paired with its component minimum —
@@ -160,49 +170,33 @@ object ComponentsStream {
     val p = pairs
       .select(col(aCol).cast("long").as("x"), col(bCol).cast("long").as("y"))
       .filter(col("x") =!= col("y") && col("x").isNotNull && col("y").isNotNull)
-      .distinct()
-      .localCheckpoint(true) // read for endpoints AND the root graph
-    val endpoints = p.select(col("x").as("id"))
-      .union(p.select(col("y").as("id"))).distinct()
+      .as[(Long, Long)].collect().distinct // on the driver: no shuffle, one job
+    val endpoints = p.flatMap { case (x, y) => Array(x, y) }.distinct
 
-    // stored roots for the batch's endpoints: broadcast the (small) id set
-    // against the star log — BroadcastHashJoin streams the log's narrow
-    // scan, the accumulated state is never shuffled. Multiple rows per id
-    // resolve to the same root (invariant above); min picks one stored
-    // value to resolve, not the answer itself.
-    val stars = readStars(spark, stateDir)
-    val relabels = readRelabels(spark, stateDir)
-    val storedOf = stars.join(broadcast(endpoints), Seq("id"), "left_semi")
-      .groupBy("id").agg(min("component").as("c0"))
-    // relabel-map joins carry NO broadcast hint: the map is small by
-    // design (pre-existing-root merges since compaction, auto-compacted),
-    // so Spark's stats broadcast it anyway — but a forced hint would pin
-    // broadcast even if the map outgrew the threshold (compaction disabled,
-    // merge-storm workload) and OOM the driver instead of degrading to a
-    // shuffle join
-    val rById = relabels.select(col("old_root").as("id"), col("new_root").as("idr"))
-    val rByC0 = relabels.select(col("old_root").as("c0"), col("new_root").as("c0r"))
-    val resolved = endpoints
-      .join(storedOf, Seq("id"), "left")
-      .join(rByC0, Seq("c0"), "left")
-      .join(rById, Seq("id"), "left")
-      .select(col("id"),
-        when(col("c0").isNotNull, coalesce(col("c0r"), col("c0")))
-          .otherwise(coalesce(col("idr"), col("id"))).as("root"))
-      .localCheckpoint(true)
+    // stored roots for the batch's endpoints: ONE narrow scan of the star
+    // log against the broadcast endpoint set — the accumulated state is
+    // never shuffled. Multiple rows per id resolve to the same root
+    // (invariant above); min picks one stored value to resolve, not the
+    // answer itself. A key present with no value names an endpoint that
+    // appears only as some row's component.
+    val starHits = probe(spark, starsPath(stateDir), StarSchema, endpoints)
+    val stored = starHits.collect { case (id, Some(c0)) => id -> c0 }
+    // relabel entries naming an endpoint or a stored root: every target
+    // the resolution below needs, and every pre-existing name a losing
+    // root can have in the map
+    val relabelHits = probe(spark, relabelsPath(stateDir), RelabelSchema,
+      (endpoints.iterator ++ stored.valuesIterator).toSet)
+    val target = relabelHits.collect { case (o, Some(n)) => o -> n }
+    val root = endpoints.map { id =>
+      id -> stored.get(id).fold(target.getOrElse(id, id))(c0 => target.getOrElse(c0, c0))
+    }.toMap
 
     // the batch's ROOT graph: O(batch) pairs over current roots — the only
     // CC this fold ever runs. Links inside an existing component collapse
     // to self-loops here and cost nothing further.
-    val rootPairs = p
-      .join(resolved.select(col("id").as("x"), col("root").as("rx")), Seq("x"))
-      .join(resolved.select(col("id").as("y"), col("root").as("ry")), Seq("y"))
-      .select(col("rx"), col("ry"))
-      .filter(col("rx") =!= col("ry"))
-      .as[(Long, Long)].collect()
-    val losers = foldRoots(rootPairs)
+    val losers = foldRoots(p.map { case (x, y) => (root(x), root(y)) }
+      .filter { case (rx, ry) => rx != ry })
     val merges = losers.length.toLong
-    val newRel = losers.toSeq.toDF("old_root", "new_root")
 
     // commit 1 (temp-swap): compose the merges into the relabel map.
     // Persist ONLY losing roots that PRE-EXIST in state — stored as some
@@ -210,52 +204,39 @@ object ComponentsStream {
     // A loser fresh to this batch needs no entry: its star rows (written
     // below) already carry the post-merge root and nothing else references
     // it — without this filter the map gains one entry per non-root node
-    // ever folded and the "O(merge events)" size claim is false. The
-    // existence probe is one extra narrow scan of the star log, paid only
-    // on batches that merged something.
-    var kept: Option[DataFrame] = None
-    if (merges > 0) {
-      val losing = newRel.select(col("old_root")).distinct()
-      val priorVs = stars
-        .select(explode(array(col("id"), col("component"))).as("old_root"))
-        .unionByName(relabels.select(col("old_root")))
-        .unionByName(relabels.select(col("new_root").as("old_root")))
-        .join(broadcast(losing), Seq("old_root"), "left_semi")
-        .distinct()
-      val keptRel = newRel.join(priorVs, Seq("old_root"), "left_semi")
-        .localCheckpoint(true) // counted, then written
-      kept = Some(keptRel)
-      // keptRel empty ⇒ no pre-existing root lost ⇒ every existing entry's
-      // target is still a current root ⇒ composition is the identity — skip
-      // the rewrite entirely (append-mostly streams never touch the map)
-      if (keptRel.count() > 0) {
-        val nrByTarget = newRel
-          .select(col("old_root").as("new_root"), col("new_root").as("nr2"))
-        val composed = relabels
-          .join(broadcast(nrByTarget), Seq("new_root"), "left")
-          .select(col("old_root"), coalesce(col("nr2"), col("new_root")).as("new_root"))
-          .unionByName(keptRel)
-        val tmp = new org.apache.hadoop.fs.Path(relabelsPath(stateDir) + ".tmp")
-        val out = new org.apache.hadoop.fs.Path(relabelsPath(stateDir))
-        composed.write.mode("overwrite").parquet(tmp.toString)
-        FsUtils.replaceDir(fs, tmp, out)
-        spark.catalog.refreshByPath(relabelsPath(stateDir))
-      }
+    // ever folded and the "O(merge events)" size claim is false. Every
+    // loser is some endpoint's resolved root, so the two probes above
+    // already saw each of its names in state.
+    val prior = starHits.keySet ++ stored.values ++ relabelHits.keySet ++ target.values
+    val keptRel = losers.filter { case (o, _) => prior(o) }
+    // keptRel empty ⇒ no pre-existing root lost ⇒ every existing entry's
+    // target is still a current root ⇒ composition is the identity — skip
+    // the rewrite entirely (append-mostly streams never touch the map)
+    if (keptRel.nonEmpty) {
+      val nrByTarget = losers.toSeq.toDF("new_root", "nr2")
+      val composed = readRelabels(spark, stateDir)
+        .join(broadcast(nrByTarget), Seq("new_root"), "left")
+        .select(col("old_root"), coalesce(col("nr2"), col("new_root")).as("new_root"))
+        .unionByName(keptRel.toSeq.toDF("old_root", "new_root"))
+      val tmp = new org.apache.hadoop.fs.Path(relabelsPath(stateDir) + ".tmp")
+      val out = new org.apache.hadoop.fs.Path(relabelsPath(stateDir))
+      composed.write.mode("overwrite").parquet(tmp.toString)
+      FsUtils.replaceDir(fs, tmp, out)
+      spark.catalog.refreshByPath(relabelsPath(stateDir))
     }
 
     // commit 2 (idempotent dir append): every non-root endpoint's star row
     // under its FINAL root
-    val nrByRoot = newRel.select(col("old_root").as("root"), col("new_root").as("rootFinal"))
-    val finalRows = resolved
-      .join(broadcast(nrByRoot), Seq("root"), "left")
-      .select(col("id"), coalesce(col("rootFinal"), col("root")).as("component"))
-      .filter(col("id") =!= col("component"))
+    val finalRoot = losers.toMap
+    val finalRows = endpoints.iterator
+      .map(id => (id, finalRoot.getOrElse(root(id), root(id))))
+      .filter { case (id, c) => id != c }.toSeq
+      .toDF("id", "component").coalesce(1)
     val tmpStars = new org.apache.hadoop.fs.Path(s"${starsPath(stateDir)}.tmp-batch-$batchId")
     finalRows.write.mode("overwrite").parquet(tmpStars.toString)
     fs.mkdirs(new org.apache.hadoop.fs.Path(starsPath(stateDir)))
     FsUtils.renameOrThrow(fs, tmpStars, starsDst)
     spark.catalog.refreshByPath(starsPath(stateDir))
-    unpersistCkpts(Seq(p, resolved) ++ kept)
     if (autoCompactBytes > 0 && FsUtils.dataBytes(fs,
         new org.apache.hadoop.fs.Path(relabelsPath(stateDir))) > autoCompactBytes)
       compactState(spark, stateDir)
@@ -272,7 +253,7 @@ object ComponentsStream {
     val relabels = readRelabels(spark, stateDir)
     val resolvedStars = stars
       .join(relabels.select(col("old_root").as("component"), col("new_root")),
-        Seq("component"), "left") // no broadcast hint — see applyBatch
+        Seq("component"), "left") // no broadcast hint — see readRelabels
       .select(col("id"), coalesce(col("new_root"), col("component")).as("sc"))
       .groupBy("id").agg(min("sc").as("sc")) // duplicates agree post-resolve
     val rById = relabels.select(col("old_root").as("id"), col("new_root").as("dc"))
@@ -303,7 +284,7 @@ object ComponentsStream {
     val relabels = readRelabels(spark, stateDir)
     val resolved = stars
       .join(relabels.select(col("old_root").as("component"), col("new_root")),
-        Seq("component"), "left") // no broadcast hint — see applyBatch
+        Seq("component"), "left") // no broadcast hint — see readRelabels
       .select(col("id"), coalesce(col("new_root"), col("component")).as("component"))
       .unionByName(relabels.select(col("old_root").as("id"), col("new_root").as("component")))
       .filter(col("id") =!= col("component"))

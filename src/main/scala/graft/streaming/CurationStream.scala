@@ -1,7 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StructType}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Dedup
 import graft.functions.TextFunctions._
@@ -52,28 +55,6 @@ object CurationStream {
   private val Bands = 8
   private val NumPerm = 64
 
-  /** Band rows (doc_id, band_idx, band_key) via the SAME
-    * [[Dedup.lshBands]] the batch path uses (word-level signatures, 64
-    * perms, 8 bands) — the state log carries the identical narrow long
-    * keys the batch election derives per run. `hashFn` must match the one
-    * used to build any pre-existing state (bucket keys are hash-specific).
-    */
-  private def bandRows(docs: DataFrame,
-                       hashFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
-    Dedup.lshBands(
-      Dedup.minhashSignatures(docs, "text", "doc_id",
-        numPerm = NumPerm, shingleK = 1, hashFn = hashFn),
-      "doc_id", NumPerm, Bands)
-
-  /** Read a state table, recovering a compaction orphan (`path.tmp` left by
-    * a crash between [[compactState]]'s delete and rename) first. */
-  private def readStateOr(spark: SparkSession, path: String, like: DataFrame): DataFrame = {
-    StateLog.healSwaps(spark, path)
-    if (FsUtils.fs(spark, path).exists(new org.apache.hadoop.fs.Path(path)))
-      spark.read.parquet(path)
-    else like.limit(0)
-  }
-
   /** Temp-swap overwrite for [[compactState]] (the compacted table is
     * derived from the files the swap deletes — tmp is written first, while
     * they still exist; [[StateLog.swapWrite]]'s refresh also evicts the
@@ -81,10 +62,35 @@ object CurationStream {
   private def swapWrite(spark: SparkSession, df: DataFrame, path: String): Unit =
     StateLog.swapWrite(spark, path, df, coalesce1 = false)
 
+  /** One collected batch document: its row (the five output columns
+    * after `doc_id`, then the fold's keys and gate verdict), its id as a
+    * long, content hash, LSH band keys and gate verdict. */
+  private case class BatchDoc(row: Row, id: Long, hash: String,
+                              bands: Seq[(Int, Long)], gate: Boolean)
+
+  /** A local frame of driver rows. */
+  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
+
   /** Curate one batch of documents against (and appending to) the state
     * under `stateDir`; returns the kept curated rows (same schema as the
     * batch pipeline's output). With `outDir` set, rows land in
     * `outDir/batch=<batchId>` idempotently (replays skip an existing dir).
+    *
+    * Per-batch work: ONE pass over the batch computes, per document, its
+    * content hash, its [[Dedup.lshBandKeys]] (the batch pipeline's key
+    * expression: word-level signatures, 64 perms, 8 bands), its five output
+    * columns and its gate verdict, and collects those rows without the
+    * text. Each state table is then probed once with a broadcast semi-join
+    * on the batch's own keys: `hashes` on the batch's content hashes,
+    * `buckets` on the exact-kept documents' bucket keys (taking the minimum
+    * logged doc id per bucket). Exact dedup and the near-dup election run
+    * on the driver over those rows, and the output and both appends are
+    * written from local frames. Driver memory is O(batch docs) fixed-width
+    * rows, the same class of bound a broadcast of the batch's keys already
+    * places on a batch; the accumulated state is never shuffled or
+    * rewritten by a fold. `hashFn` must match the one that built any
+    * existing state (bucket keys are hash-specific).
     */
   def curateBatch(spark: SparkSession, batch: DataFrame, stateDir: String,
                   batchId: Long,
@@ -96,51 +102,70 @@ object CurationStream {
     val hashesPath = s"$stateDir/hashes"
     val bucketsPath = s"$stateDir/buckets"
 
-    // --- exact dedup against state + within batch -------------------------
-    val withHash = batch.withColumn("content_hash", md5(col("text")))
-    val hashState = readStateOr(spark, hashesPath,
-      withHash.select(col("content_hash"), col("doc_id").as("owner_id")))
-    val batchFirst = withHash.groupBy("content_hash")
-      .agg(min("doc_id").as("doc_id"))
-    val freshHashes = batchFirst
-      .join(hashState.select("content_hash"), Seq("content_hash"), "left_anti")
-      .localCheckpoint(true) // referenced by exactKept AND the state append
-    val exactKept = batch.join(freshHashes.select("doc_id"), Seq("doc_id"), "left_semi")
-      .localCheckpoint(true) // referenced by batchBands AND the gate stage
+    // --- one pass: keys, output columns and gate verdict per document -----
+    val quality = qualityScore(col("text"))
+    val langPred = langIdHeuristic(col("text"))
+    val sig = Dedup.minhashSignature(Dedup.wordShingles(col("text"), 1),
+      Dedup.permutations(NumPerm), hashFn)
+    // a null id joins nothing, so no fold ever keeps or records it
+    val pass = batch.filter(col("doc_id").isNotNull).select(
+      col("doc_id"),
+      langPred.as("lang_pred"),
+      quality.as("quality"),
+      length(col("text")).cast("long").as("char_len"),
+      wsTokenCount(col("text")).as("ws_tokens"),
+      reTokenCount(col("text")).as("re_tokens"),
+      md5(col("text")).as("content_hash"),
+      Dedup.lshBandKeys(sig, NumPerm, Bands).as("bands"),
+      coalesce(quality >= minQuality && langPred === lang, lit(false)).as("gate"))
+    val outSchema = StructType(pass.schema.fields.take(6))
+    val idField = pass.schema("doc_id")
+    val hashField = pass.schema("content_hash")
+    val bandFields = pass.schema("bands").dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType].fields
+    val hashSchema = StructType(Seq(hashField, idField.copy(name = "owner_id")))
+    val bucketSchema = StructType(idField +: bandFields)
+    val docs = pass.collect().toSeq.map(r => BatchDoc(r, r.getAs[Number](0).longValue,
+      r.getString(6), Option(r.getSeq[Row](7)).getOrElse(Nil).map(b => (b.getInt(0), b.getLong(1))),
+      r.getBoolean(8)))
+
+    /** `read` over the state table at `path` restricted to `keys` (a
+      * broadcast semi-join); None when the table or the key set is empty. */
+    def probe[T](path: String, schema: StructType, keys: Seq[Row], keySchema: StructType)(
+        read: DataFrame => T): Option[T] =
+      StateLog.readKnown(spark, path, schema).filter(_ => keys.nonEmpty).map(state =>
+        read(state.join(broadcast(local(spark, keys, keySchema)),
+          keySchema.fieldNames.toSeq, "left_semi")))
+
+    // --- exact dedup: min id per hash, against the hashes seen before -----
+    val firstOf = mutable.LinkedHashMap.empty[String, BatchDoc]
+    docs.foreach(d => if (firstOf.get(d.hash).forall(_.id > d.id)) firstOf(d.hash) = d)
+    val seen = probe(hashesPath, hashSchema, firstOf.keys.filter(_ != null).map(Row(_)).toSeq,
+        StructType(Seq(hashField)))(
+      _.select("content_hash").collect().map(_.getString(0)).toSet).getOrElse(Set.empty)
+    // a null hash never matches state (SQL equality), so it is always fresh
+    val fresh = firstOf.values.filter(d => d.hash == null || !seen(d.hash)).toSeq
+    val freshIds = fresh.map(_.id).toSet
+    val exactKept = docs.filter(d => freshIds(d.id))
 
     // --- near-dup election against (log ∪ batch), batch's buckets only ----
-    // pinned: the signature subtree is the batch's dominant cost and is
-    // otherwise re-executed for batchKeys, newMins, keepIds AND the append
-    val batchBands = bandRows(exactKept, hashFn).localCheckpoint(true)
-    val bucketLog = readStateOr(spark, bucketsPath, batchBands)
-    val batchKeys = batchBands.select("band_idx", "band_key").distinct()
-    val relevantLog = bucketLog.join(batchKeys, Seq("band_idx", "band_key"), "left_semi")
-    val newMins = relevantLog.unionByName(batchBands)
-      .groupBy("band_idx", "band_key")
-      .agg(min("doc_id").as("bucket_min"))
-    val keepIds = batchBands.join(newMins, Seq("band_idx", "band_key"))
-      .groupBy("doc_id")
-      .agg(min("bucket_min").as("rep_id"))
-      .filter(col("rep_id") === col("doc_id"))
-      .select("doc_id")
+    val bucketMin = mutable.HashMap.empty[(Int, Long), Long]
+    probe(bucketsPath, bucketSchema,
+        exactKept.flatMap(_.bands).distinct.map { case (i, k) => Row(i, k) },
+        StructType(bandFields))(
+      _.groupBy("band_idx", "band_key").agg(min(col("doc_id").cast("long")))
+        .collect().foreach(r => bucketMin((r.getInt(0), r.getLong(1))) = r.getLong(2)))
+    exactKept.foreach(d => d.bands.foreach(k =>
+      bucketMin(k) = bucketMin.get(k).fold(d.id)(math.min(_, d.id))))
+    // a doc is kept iff it is the minimum over every one of its buckets
+    val nearKept = exactKept.groupBy(_.id).collect {
+      case (id, ds) if ds.flatMap(_.bands).map(bucketMin).minOption.contains(id) => id
+    }.toSet
 
-    // --- stateless gates + stats (identical to the batch pipeline) --------
-    val curated = exactKept
-      .join(keepIds, Seq("doc_id"), "left_semi")
-      .withColumn("quality", qualityScore(col("text")))
-      .withColumn("lang_pred", langIdHeuristic(col("text")))
-      .filter(col("quality") >= minQuality && col("lang_pred") === lang)
-      .select(
-        col("doc_id"),
-        col("lang_pred"),
-        col("quality"),
-        length(col("text")).cast("long").as("char_len"),
-        wsTokenCount(col("text")).as("ws_tokens"),
-        reTokenCount(col("text")).as("re_tokens"))
-
-    // pin the result before any state mutation (the caller may collect it
-    // after the appends; the plan must not see post-batch state)
-    val result = curated.localCheckpoint(true)
+    // --- stateless gates: the pass's verdict ------------------------------
+    val result = local(spark,
+      exactKept.filter(d => nearKept(d.id) && d.gate).map(d => Row.fromSeq(d.row.toSeq.take(6))),
+      outSchema).coalesce(1)
 
     // --- commit: output FIRST (idempotent), state appends second ----------
     outDir.foreach { d =>
@@ -153,20 +178,25 @@ object CurationStream {
         FsUtils.renameOrThrow(fs, tmp, dst)
       }
     }
-    freshHashes.select(col("content_hash"), col("doc_id").as("owner_id"))
-      .write.mode("append").parquet(hashesPath)
-    batchBands.write.mode("append").parquet(bucketsPath)
+    // an empty append adds nothing, so it is skipped (a full replay writes
+    // no state at all)
+    if (fresh.nonEmpty)
+      local(spark, fresh.map(d => Row(d.hash, d.row.get(0))), hashSchema).coalesce(1)
+        .write.mode("append").parquet(hashesPath)
+    if (exactKept.nonEmpty)
+      local(spark, exactKept.flatMap(d => d.bands.map { case (i, k) => Row(d.row.get(0), i, k) }),
+        bucketSchema).coalesce(1)
+        .write.mode("append").parquet(bucketsPath)
 
     // retention policy (round 7): the band log otherwise grows every batch
     // until someone remembers to compact. When the log's BYTE size (a
     // driver-side listing, no data read) crosses the threshold, fold it
-    // inline. Bytes, not file count: small appends coalesce to one file
-    // each (AQE), so a file-count trigger scales with batch CADENCE while
-    // the read cost it guards scales with accumulated ROWS — bytes track
-    // rows under any file layout (StreamStress measured 1 file/batch at
-    // toy batches vs shuffle.partitions-many at production ones).
+    // inline. Bytes, not file count: each append writes one file, so a
+    // file-count trigger scales with batch CADENCE while the read cost it
+    // guards scales with accumulated ROWS — bytes track rows under any
+    // file layout.
     // Crash-safe at every point: compaction's temp-swap + the orphan heal
-    // in readStateOr cover a crash mid-fold, and a crash BEFORE the fold
+    // in StateLog.readKnown cover a crash mid-fold, and a crash BEFORE the fold
     // just leaves the log for the next batch's trigger.
     if (autoCompactBytes > 0 && logBytes(spark, bucketsPath) > autoCompactBytes)
       compactState(spark, stateDir)

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Analytics
 
@@ -78,32 +79,33 @@ object OverviewStream {
       |COUNT(DISTINCT o_custkey) AS distinct_customers
       |FROM orders GROUP BY o_orderpriority ORDER BY tenant""".stripMargin
 
+  /** Known schemas of the two state logs, `batch` partition column
+    * included: a read passes them instead of inferring the schema (one
+    * footer-reading job per read), and a log whose every batch dir is
+    * file-less (an empty parquet write emits NO part files) reads as empty
+    * instead of failing inference. */
+  private val SeenCustomersSchema = StructType(Seq(
+    StructField("tenant", StringType), StructField("o_custkey", LongType),
+    StructField("batch", LongType)))
+  private val OrderDeltasSchema = StructType(Seq(
+    StructField("tenant", StringType), StructField("n_orders", LongType),
+    StructField("sum_price", DoubleType), StructField("min_status", StringType),
+    StructField("batch", LongType)))
+
   /** The accumulated seen-customer log, excluding `excludeBatch` (a replay
-    * must not read the partition it is about to overwrite). Missing state
-    * (explicit `fs.exists` check — EventsPipeline's pattern) and file-less
-    * state (every batch so far was empty: an empty parquet write emits NO
-    * part files, so schema inference fails) read as empty; any other error
-    * propagates — a catch-all would mask data loss as a fresh start. */
+    * must not read the partition it is about to overwrite). */
   private def seenCustomers(spark: SparkSession, stateDir: String,
       excludeBatch: Long): DataFrame = {
     val path = s"$stateDir/seen_customers"
-    val empty = spark.range(0).select(
-      lit("").as("tenant"), col("id").as("o_custkey"))
     val fs = graft.functions.FsUtils.fs(spark, path)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path))) empty
-    else {
-      // heal an interrupted compactState FIRST: mid-compaction the log is
-      // only the hidden tmp dir, which partition discovery cannot see — an
-      // unguarded read would return empty and the replaying batch would
-      // re-mark every customer as new (permanent distinct overcount)
-      recoverCompact(fs, path)
-      try spark.read.parquet(path).filter(col("batch") =!= excludeBatch)
-        .select(col("tenant"), col("o_custkey"))
-      catch {
-        case e: AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => empty
-      }
-    }
+    // heal an interrupted compactState FIRST: mid-compaction the log is
+    // only the hidden tmp dir, which partition discovery cannot see — an
+    // unguarded read would return empty and the replaying batch would
+    // re-mark every customer as new (permanent distinct overcount)
+    if (fs.exists(new org.apache.hadoop.fs.Path(path))) recoverCompact(fs, path)
+    StateLog.readKnownOrEmpty(spark, path, SeenCustomersSchema)
+      .filter(col("batch") =!= excludeBatch)
+      .select(col("tenant"), col("o_custkey"))
   }
 
   /** Fold one orders micro-batch into the state. Idempotent per batchId.
@@ -149,18 +151,7 @@ object OverviewStream {
       val fs = graft.functions.FsUtils.fs(spark, root)
       if (fs.exists(new org.apache.hadoop.fs.Path(root))) recoverCompact(fs, root)
     }
-    val deltasPath = s"$stateDir/order_deltas"
-    val emptyDeltas = spark.range(0).select(lit("").as("tenant"), lit(0L).as("n_orders"),
-      lit(0.0).as("sum_price"), lit(null).cast("string").as("min_status"))
-    val deltas =
-      if (!graft.functions.FsUtils.fs(spark, deltasPath)
-          .exists(new org.apache.hadoop.fs.Path(deltasPath))) emptyDeltas
-      else
-        try spark.read.parquet(deltasPath)
-        catch { // every batch so far was empty → all delta dirs file-less
-          case e: AnalysisException
-              if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") => emptyDeltas
-        }
+    val deltas = StateLog.readKnownOrEmpty(spark, s"$stateDir/order_deltas", OrderDeltasSchema)
     val totals = deltas.groupBy(col("tenant")).agg(
       sum("n_orders").cast("long").as("total_orders"),
       round(coalesce(sum("sum_price"), lit(0.0)), 2).as("total_revenue"),

@@ -218,6 +218,22 @@ object StateLog {
       if (!f.exists(out) && f.exists(tmp)) FsUtils.renameOrThrow(f, tmp, out)
     }
 
+  /** A state table read with its known schema (no schema-inference job)
+    * after [[healSwaps]]; `None` when the table does not exist yet. */
+  def readKnown(spark: SparkSession, path: String,
+                schema: org.apache.spark.sql.types.StructType): Option[DataFrame] = {
+    healSwaps(spark, path)
+    if (FsUtils.fs(spark, path).exists(new Path(path)))
+      Some(spark.read.schema(schema).parquet(path))
+    else None
+  }
+
+  /** [[readKnown]], with a missing table read as empty. */
+  def readKnownOrEmpty(spark: SparkSession, path: String,
+                       schema: org.apache.spark.sql.types.StructType): DataFrame =
+    readKnown(spark, path, schema).getOrElse(
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+
   /** Temp-swap a whole dir into place: write `df` to `path.tmp`, then
     * delete-and-rename over `path` — the single-rename MV rewrite every
     * keyed-state stream shares. Crash inside the swap is healed by

@@ -36,7 +36,7 @@ object ProbeAB {
     val docs = graft.Tables.documents(spark, sf)
     // 8x amplification inline (values repeat, ids re-keyed)
     val k = 8
-    val amp = docs.crossJoin(spark.range(k).select(col("id").as("rep")))
+    val amp = docs.select(col("*"), explode(sequence(lit(0L), lit(k - 1L))).as("rep"))
       .select((col("doc_id") * k + col("rep")).as("doc_id"),
         col("text"), col("source"))
     val grams = CorpusOverlap.sliceGrams(graft.Tables.fanOut(amp), "text", "source")

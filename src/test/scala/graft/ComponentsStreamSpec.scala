@@ -36,6 +36,11 @@ class ComponentsStreamSpec extends AnyFunSuite with SparkSuite {
   private def tmpDir(tag: String) =
     java.nio.file.Files.createTempDirectory(s"graft-ccs-$tag").toString
 
+  // the jobs of one warm fold as measured, plus one of slack: a fold that
+  // grows by more than one job (an eager checkpoint, count or schema
+  // inference reintroduced per batch) fails the budget spec
+  private val ComponentsBudget = 6
+
   private def apply(pairs: Seq[(Long, Long)], id: Long, dir: String): Long =
     ComponentsStream.applyBatch(spark, pairs.toDF("a", "b"), "a", "b", id, dir)
 
@@ -226,5 +231,14 @@ class ComponentsStreamSpec extends AnyFunSuite with SparkSuite {
     assert(first == freshMerges(batches.head))
     batches.zipWithIndex.tail.foreach { case (b, i) => apply(b, i.toLong, dir) }
     assert(labelsOf(dir, nodes) == twinOf(nodes, pairs))
+  }
+
+  test("job budget: a warm batch that merges a pre-existing root") {
+    val dir = tmpDir("budget")
+    apply(Seq((2L, 1L), (3L, 2L), (4L, 3L), (21L, 20L), (22L, 21L)), 0L, dir)
+    // the bridge makes pre-existing root 20 lose, so the relabel rewrite
+    // runs too: every commit path of the fold is counted
+    val jobs = jobsOf(apply(Seq((20L, 4L), (30L, 31L), (5L, 4L)), 1L, dir))
+    assert(jobs <= ComponentsBudget, s"$jobs jobs > budget $ComponentsBudget")
   }
 }

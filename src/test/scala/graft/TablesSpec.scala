@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Pins the engine's view of the REAL driver testdata files.
@@ -73,6 +74,22 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
         s"Tables (see Tables.events) and update this expectation")
       assert(df.count() > 0)
     }
+
+  test("fanOut and keySorted reject an input that is not scan-only") {
+    val docs = Tables.documents(spark, Sf0001)
+    val grouped = docs.groupBy("source").count()
+    for (helper <- Seq[org.apache.spark.sql.DataFrame => Any](
+        Tables.fanOut(_), Tables.keySorted(_, "source"))) {
+      val e = intercept[IllegalArgumentException](helper(grouped))
+      assert(e.getMessage.contains("an aggregate"))
+      // filters, projections and generators stay legal
+      helper(docs.filter(col("doc_id") < 100).select(col("doc_id"), col("source"),
+        explode(split(col("text"), " ")).as("w")))
+    }
+    for (bad <- Seq(docs.join(docs.select("doc_id"), "doc_id"), docs.repartition(3),
+        docs.orderBy("doc_id")))
+      intercept[IllegalArgumentException](Tables.fanOut(bad))
+  }
 
   test("driver flagship entry() returns rows on the real sf0.001 data") {
     assert(SparkEntry.entry(spark).count() > 0)
