@@ -1,20 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // match the Verify/oracle session: day bucketing is TZ-dependent
-      .config("spark.sql.session.timeZone", "UTC")
-      // backward-compat for nanos-generation events.parquet; harmless when
-      // the file carries a native timestamp (Tables.events is schema-adaptive)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus(32))
     // absorb session/codegen/IO-pool initialization so the first measured
     // query reflects the query, not JVM warmup
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -2,91 +2,26 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{BloomMightContain, CosinePairs, CosinePairsBounded, DotProduct, HammingPairsBounded, JaccardPairs, JaccardPairsBounded, Md5Prefix60, MinHashSig, SimHash64, WinnowingMins, WordShingles}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graft.GraftSqlFunctions
 
 /** SparkSessionExtensions hook exposing the engine's custom codegen
-  * expressions to SQL users:
+  * expressions (the [[GraftSqlFunctions.functions]] table) to SQL users of
+  * a session built with `spark.sql.extensions=graft.GraftExtensions`:
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
   * spark.sql("SELECT graft_dot(a.embedding, b.embedding) ...")
   * }}}
   *
-  * The Scala Column API ([[graft.functions.VectorFunctions]],
-  * [[graft.operators.Dedup.simhash]]) constructs these expressions directly
-  * and needs no registration.
+  * [[Sessions.local]] does not set it; a live session gets the same
+  * functions from `GraftSqlFunctions.register`. The Scala Column API
+  * ([[graft.functions.VectorFunctions]], [[graft.operators.Dedup.simhash]])
+  * constructs these expressions directly and needs no registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (args: Seq[Expression]) => DotProduct(args(0), args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      (args: Seq[Expression]) => MinHashSig(args(0), args(1), args(2))))
-    // scalar config parameters (window size / thresholds) must be literals
-    ext.injectFunction((
-      FunctionIdentifier("graft_winnowing_mins"),
-      new ExpressionInfo(classOf[WinnowingMins].getName, "graft_winnowing_mins"),
-      (args: Seq[Expression]) =>
-        WinnowingMins(args(0), GraftExtensions.litInt(args(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine_pairs"),
-      new ExpressionInfo(classOf[CosinePairs].getName, "graft_cosine_pairs"),
-      (args: Seq[Expression]) =>
-        CosinePairs(args(0), GraftExtensions.litDouble(args(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaccard_pairs"),
-      new ExpressionInfo(classOf[JaccardPairs].getName, "graft_jaccard_pairs"),
-      (args: Seq[Expression]) =>
-        JaccardPairs(args(0), GraftExtensions.litDouble(args(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_cosine_pairs_bounded"),
-      new ExpressionInfo(classOf[CosinePairsBounded].getName, "graft_cosine_pairs_bounded"),
-      (args: Seq[Expression]) =>
-        CosinePairsBounded(args(0), args(1), GraftExtensions.litDouble(args(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaccard_pairs_bounded"),
-      new ExpressionInfo(classOf[JaccardPairsBounded].getName, "graft_jaccard_pairs_bounded"),
-      (args: Seq[Expression]) =>
-        JaccardPairsBounded(args(0), args(1), GraftExtensions.litDouble(args(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_hamming_pairs_bounded"),
-      new ExpressionInfo(classOf[HammingPairsBounded].getName, "graft_hamming_pairs_bounded"),
-      (args: Seq[Expression]) =>
-        HammingPairsBounded(args(0), args(1), GraftExtensions.litInt(args(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_md5_prefix60"),
-      new ExpressionInfo(classOf[Md5Prefix60].getName, "graft_md5_prefix60"),
-      (args: Seq[Expression]) => Md5Prefix60(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("graft_word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_word_shingles"),
-      (args: Seq[Expression]) =>
-        WordShingles(args(0), GraftExtensions.litInt(args(1)))))
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_might_contain"),
-      new ExpressionInfo(classOf[BloomMightContain].getName, "graft_bloom_might_contain"),
-      (args: Seq[Expression]) =>
-        BloomMightContain(args(0), args(1), GraftExtensions.litInt(args(2)))))
-    // optimizer rule: sink global sorts below computed projections so the
-    // range partitioner's sampling job re-reads the scan, not the pipeline
-    ext.injectOptimizerRule(_ => graft.plans.PushSortBelowProjects)
-  }
-}
-
-object GraftExtensions {
-  private[graft] def litInt(e: Expression): Int =
-    e.eval().asInstanceOf[Number].intValue
-  private[graft] def litDouble(e: Expression): Double =
-    e.eval().asInstanceOf[Number].doubleValue
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftSqlFunctions.functions.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), build))
+    }
 }

@@ -165,8 +165,7 @@ object Tables {
     * budget ⇒ target = parallelism ⇒ identity when the scan already has
     * that many splits). Per-query A/Bs at the call sites.
     */
-  private[graft] val FanOutBytesPerTask: Long =
-    sys.env.getOrElse("SPARK_GRAFT_FANOUT_TASK_BYTES", "65536").toLong
+  private[graft] final val FanOutBytesPerTask = 65536L
 
   /** @param bytesPerTask per-task input budget: the default suits gram/
     *   hash passes feeding aggregation state (64 KB ≈ tens of ms of CPU

@@ -6,22 +6,6 @@ import java.nio.file.{Files, Paths}
   * machinery is shared with [[graft.tools.RunOne]] (the focused
   * subset-replay tool) so the two can never drift. */
 object Verify {
-  /** The gate session — ONE definition for Verify and its replay tools. */
-  def gateSession(defaultCpus: String = "4"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // backward-compat for nanos-generation events.parquet; harmless when
-      // the file carries a native timestamp (Tables.events is schema-adaptive)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Dump `names` (or every registered query) to `outDir`; returns the
     * number of failed queries. */
   def dumpQueries(spark: SparkSession, sfDir: String, outDir: String,
@@ -75,7 +59,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = gateSession()
+    val spark = Sessions.local(Sessions.cpus(4))
     val failed = dumpQueries(spark, sfDir, outDir)
     writeOracles(outDir, sfDir = Some(sfDir))
     spark.stop()

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * SURVEY.md §7.2 step 5). Everything here is composed from built-in
   * `org.apache.spark.sql.functions` so it stays inside whole-stage codegen —
   * no Scala UDFs in the hot path. Each function has a line-for-line ANSI SQL
-  * mirror used by the DuckDB oracle (see SparkEntry.oracleSql), so all
+  * mirror used by the DuckDB oracles (see SparkEntry.Query), so all
   * arithmetic is written to be bit-identical across engines: integer counts,
   * exact divisions, `round(_, 4)` on any float output.
   */

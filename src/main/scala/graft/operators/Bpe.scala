@@ -301,9 +301,10 @@ object Bpe {
     val tk = dir.flatMap(tables.get)
       .getOrElse(Tokenizer(Nil, Array.empty, Array.empty))
     if (tk.words.isEmpty)
-      // can't throw: SparkEntry.oracleSql is constructed eagerly by specs
-      // that only read its keys — but an un-gated dump must be LOUD, the
-      // LENGTH(w) fallback oracle only matches a gate that also fell back
+      // can't throw: SparkEntry.oracleSql evaluates every oracle, also on a
+      // RunOne subset that never ran this query — but an un-gated dump must
+      // be LOUD, the LENGTH(w) fallback oracle only matches a gate that also
+      // fell back
       System.err.println(
         s"[bpe] WARNING: $label has no gate-recorded tokenizer for dir=$dir — emitting LENGTH(w) fallback oracle")
     def esc(s: String) = s.replace("'", "''")

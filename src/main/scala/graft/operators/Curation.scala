@@ -251,9 +251,9 @@ object Curation {
     * so `ppl <= boundary` is bitwise-unambiguous on both engines. The
     * no-boundary fallback (oracle dumped without the query having run)
     * yields a deliberately-degenerate everything-is-tail oracle rather
-    * than throwing, because the `oracleSql` Map is constructed eagerly in
-    * specs that only look at its keys; `Verify`'s run order makes the
-    * fallback unreachable on the gate path. */
+    * than throwing, because `SparkEntry.oracleSql` evaluates every oracle,
+    * also on a RunOne subset that never ran this query; `Verify`'s run
+    * order makes the fallback unreachable on the gate path. */
   def modelFilterScaledSql(pTau: Double = 0.5, repMax: Double = 0.5): String = {
     val bs = graft.OracleDir.get.orElse(Option(lastGateDir.get))
       .flatMap(gateBoundaries.get).getOrElse(Seq.empty)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Materialize an sf1-equivalent testdata directory (round-7 item 6): the
@@ -20,14 +20,7 @@ object AmplifyTestdata {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = sys.env.getOrElse("SPARK_GRAFT_AMP_OUT", "/tmp/sf1equiv")
     val k = sys.env.getOrElse("SPARK_GRAFT_AMP", "10").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
 
     def amp(df: DataFrame, keys: Seq[String]): DataFrame = {
       val rep = df.select(col("*"), explode(sequence(lit(0L), lit(k - 1L))).as("rep"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Incremental connected-components stress (round 7, reshaped round 8):
@@ -29,13 +29,7 @@ import org.apache.spark.sql.functions._
   */
 object CcStreamStress {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
 
     val m = sys.env.getOrElse("SPARK_GRAFT_CC_BATCH_NODES", "200000").toLong
     val k = sys.env.getOrElse("SPARK_GRAFT_CC_BRIDGES", "1000").toLong

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Components, CorpusOverlap, Curation, HashedModel, Pq, Similarity, SubstringDedup, TextAnalysis}
 import graft.streaming.{AnomalyStream, BpeStream, CdcStream, ComponentsStream, CurationStream, DriftStream, EmbeddingIndexStream, FunnelStream, HashedModelStream, HistogramStream, LexStatsStream, MediaStream, OverlapStream, ProfileStream, QualityStream, RetentionStream, StateHistoryStream, SubstringDedupStream}
@@ -45,13 +45,7 @@ object ComposedStreamSoak {
 
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
     import spark.implicits._
 
     val amp = sys.env.getOrElse("SPARK_GRAFT_SOAK_AMP", "8").toInt

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hot-day merge stress (round 6): the claim behind
@@ -12,13 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object MergeStress {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
 
     val nDay = sys.env.getOrElse("SPARK_GRAFT_MERGE_DAY_ROWS", "2000000").toLong
     val nBatch = sys.env.getOrElse("SPARK_GRAFT_MERGE_BATCH_ROWS", "50000").toLong

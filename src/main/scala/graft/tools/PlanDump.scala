@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for every registered query (or the
   * comma-separated list in SPARK_GRAFT_PROBE_QUERIES) to one file per query
   * under SPARK_GRAFT_PLAN_DIR — the optimization round's before/after plan
@@ -14,14 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val outDir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "/tmp/plans"))

@@ -1,20 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch probe main — rewritten per investigation. Current: round-14
   * close-out plan audit — print the executed-plan operator skeleton of
   * each new gate query (evidence for the PLANS.md plan-audit section). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = sys.env.getOrElse("SPARK_GRAFT_PROBE_QUERIES", "doc_pagerank").split(",").toSeq
     for (n <- names) {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scratch probe — current (round 14): adjudicate the two r13 driver-epoch
   * outliers (VERDICT "what's wrong" #3). `bm25_topk` read 0.22 → 2.70 s and
@@ -13,14 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * structurally. */
 object ProbePerf {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def run(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
     def time(name: String, reps: Int = 5)(mk: => DataFrame): Unit = {

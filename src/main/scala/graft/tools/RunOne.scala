@@ -14,7 +14,7 @@ object RunOne {
     val names = args.drop(2).toSet
     val unknown = names -- graft.SparkEntry.queries.keySet
     unknown.foreach(n => System.err.println(s"[runone] no such query: $n"))
-    val spark = graft.Verify.gateSession(defaultCpus = "8")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(4))
     val failed = graft.Verify.dumpQueries(spark, sfDir, outDir, Some(names))
     graft.Verify.writeOracles(outDir, Some(names), Some(sfDir))
     spark.stop()

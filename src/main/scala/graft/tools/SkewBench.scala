@@ -16,18 +16,8 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    def session(aqe: Boolean): SparkSession = {
-      org.apache.spark.sql.SparkSession.getActiveSession.foreach(_.stop())
-      SparkSession.builder()
-        .master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.adaptive.enabled", aqe.toString)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    }
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     val HotKey = 7L
     def skewed(spark: SparkSession): (DataFrame, DataFrame) = {
@@ -59,8 +49,8 @@ object SkewBench {
         .write.format("noop").mode("overwrite").save()
 
     // A: plain shuffle join, AQE off — the hot key lands on ONE reducer
-    val sA = session(aqe = false)
-    val (l1, o1) = skewed(sA)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val (l1, o1) = skewed(spark)
     l1.count() // warm
     time("plain join (AQE off)") { run(l1.join(o1, Seq("k"))) }
     // B: blanket salted join, AQE off — hot key pre-split, but the WHOLE
@@ -95,10 +85,10 @@ object SkewBench {
         sampleFraction = 0.01, hotShare = 0.05))
     }
     // C: plain shuffle join, AQE on — runtime skew-split for comparison
-    val sC = session(aqe = true)
-    val (l2, o2) = skewed(sC)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val (l2, o2) = skewed(spark)
     l2.count()
     time("plain join (AQE skew-split)") { run(l2.join(o2, Seq("k"))) }
-    sC.stop()
+    spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing.h60
 
@@ -20,13 +19,7 @@ import graft.functions.Hashing.h60
   * not a defect of the exchange layout. */
 object SubstringDecompose {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
     val dirs = Seq("/root/testdata/sf0.1",
       sys.env.getOrElse("SPARK_GRAFT_AMP_DIR", "/tmp/sf1equiv"))
     for (dir <- dirs) {

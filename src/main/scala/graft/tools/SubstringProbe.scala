@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Warm-vs-cold adjudication probe for the `substring_dedup` sf1-equiv
   * ratio (round 11): run the gate query N times in ONE session at
   * SPARK_GRAFT_SF_DIR and print each rep — separates first-execution
@@ -10,13 +8,7 @@ object SubstringProbe {
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1equiv")
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROBE_REPS", "5").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(graft.Sessions.cpus(32))
     for (r <- 1 to reps) {
       val t0 = System.nanoTime()
       val df = graft.operators.SubstringDedup.repeatedSpansGate(spark, sf)

@@ -42,39 +42,36 @@ object DatasetInternals {
     }
 }
 
-/** Runtime SQL registration of the graft expressions for sessions that were
-  * not built with `spark.sql.extensions=graft.GraftExtensions` (the config
-  * path only applies at session construction — `getOrCreate` on a live
-  * session ignores it).
+/** The graft expressions as SQL functions: ONE table, read both by
+  * [[register]] (runtime registration on a live session) and by
+  * `graft.GraftExtensions` (the `spark.sql.extensions` hook, which only
+  * applies at session construction — `getOrCreate` on a live session
+  * ignores it).
   */
 object GraftSqlFunctions {
+  private def litInt(e: Expression): Int = e.eval().asInstanceOf[Number].intValue
+  private def litDouble(e: Expression): Double = e.eval().asInstanceOf[Number].doubleValue
+
+  /** name → builder over the argument expressions; scalar config
+    * parameters (window size / thresholds) must be literals. */
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_dot" -> (a => DotProduct(a(0), a(1))),
+    "graft_simhash64" -> (a => SimHash64(a.head)),
+    "graft_minhash_sig" -> (a => MinHashSig(a(0), a(1), a(2))),
+    "graft_winnowing_mins" -> (a => WinnowingMins(a(0), litInt(a(1)))),
+    "graft_cosine_pairs" -> (a => CosinePairs(a(0), litDouble(a(1)))),
+    "graft_jaccard_pairs" -> (a => JaccardPairs(a(0), litDouble(a(1)))),
+    "graft_cosine_pairs_bounded" -> (a => CosinePairsBounded(a(0), a(1), litDouble(a(2)))),
+    "graft_jaccard_pairs_bounded" -> (a => JaccardPairsBounded(a(0), a(1), litDouble(a(2)))),
+    "graft_hamming_pairs_bounded" -> (a => HammingPairsBounded(a(0), a(1), litInt(a(2)))),
+    "graft_md5_prefix60" -> (a => Md5Prefix60(a.head)),
+    "graft_word_shingles" -> (a => WordShingles(a(0), litInt(a(1)))),
+    "graft_bloom_might_contain" -> (a => BloomMightContain(a(0), a(1), litInt(a(2)))))
+
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    def litInt(e: Expression): Int = e.eval().asInstanceOf[Number].intValue
-    def litDouble(e: Expression): Double = e.eval().asInstanceOf[Number].doubleValue
-    reg.createOrReplaceTempFunction("graft_dot",
-      (args: Seq[Expression]) => DotProduct(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      (args: Seq[Expression]) => SimHash64(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      (args: Seq[Expression]) => MinHashSig(args(0), args(1), args(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnowing_mins",
-      (args: Seq[Expression]) => WinnowingMins(args(0), litInt(args(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine_pairs",
-      (args: Seq[Expression]) => CosinePairs(args(0), litDouble(args(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaccard_pairs",
-      (args: Seq[Expression]) => JaccardPairs(args(0), litDouble(args(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine_pairs_bounded",
-      (args: Seq[Expression]) => CosinePairsBounded(args(0), args(1), litDouble(args(2))), "built-in")
-    reg.createOrReplaceTempFunction("graft_jaccard_pairs_bounded",
-      (args: Seq[Expression]) => JaccardPairsBounded(args(0), args(1), litDouble(args(2))), "built-in")
-    reg.createOrReplaceTempFunction("graft_hamming_pairs_bounded",
-      (args: Seq[Expression]) => HammingPairsBounded(args(0), args(1), litInt(args(2))), "built-in")
-    reg.createOrReplaceTempFunction("graft_md5_prefix60",
-      (args: Seq[Expression]) => Md5Prefix60(args.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_word_shingles",
-      (args: Seq[Expression]) => WordShingles(args(0), litInt(args(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_might_contain",
-      (args: Seq[Expression]) => BloomMightContain(args(0), args(1), litInt(args(2))), "built-in")
+    functions.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

@@ -13,9 +13,24 @@ class AnalyticsSpec extends AnyFunSuite with SparkSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every registered query runs and every oracle key exists in queries") {
+  test("every oracle key names a registered query") {
     val qs = SparkEntry.queries
     assert(SparkEntry.oracleSql.keySet.subsetOf(qs.keySet))
+  }
+
+  test("a registry with a duplicate query name throws") {
+    import SparkEntry.{Query, registry}
+    val q = Query("dup", (s, _) => s.range(1).toDF(), () => "SELECT 0 AS id")
+    assert(registry(q, q.copy(name = "other")).map(_.name) == Seq("dup", "other"))
+    val e = intercept[IllegalArgumentException](
+      registry(q, q.copy(oracle = () => "SELECT 1 AS id")))
+    assert(e.getMessage.contains("dup"))
+  }
+
+  test("every RegistryBacked and EagerRebuild name is a registered query") {
+    assert(SparkEntry.registryBacked.nonEmpty && SparkEntry.eagerBuilt.nonEmpty)
+    assert(SparkEntry.registryBacked.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.eagerBuilt.subsetOf(SparkEntry.queries.keySet))
   }
 
   test("overview returns exactly one row with non-negative counts") {

@@ -325,6 +325,10 @@ class CatalystExpressionSpec extends AnyFunSuite with SparkSuite {
     val ws = spark.sql(
       "SELECT graft_word_shingles(array('a', 'b', 'c'), 2) AS s").head().getSeq[String](0)
     assert(ws == Seq("a b", "b c"))
+    // every function in the table resolves, not only the six called above
+    val names = org.apache.spark.sql.graft.GraftSqlFunctions.functions.map(_._1)
+    assert(names.size == 12 && names.distinct == names)
+    names.foreach(n => assert(spark.catalog.functionExists(n), n))
   }
   test("TokenRatioLookup is bit-identical to the literal-map-with-floor form") {
     import org.apache.spark.sql.functions._

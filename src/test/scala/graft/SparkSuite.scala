@@ -4,16 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared session for all suites (getOrCreate → one JVM-wide session). */
 trait SparkSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // backward-compat for nanos-generation events.parquet; harmless when
-    // the file carries a native timestamp (Tables.events is schema-adaptive)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // fixed at 4 cores whatever SPARK_GRAFT_CPUS says: the job-budget specs
+  // count jobs whose number depends on the partition count
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val Sf0001 = "/root/testdata/sf0.001"
 
