@@ -218,11 +218,7 @@ object ComponentsStream {
         .join(broadcast(nrByTarget), Seq("new_root"), "left")
         .select(col("old_root"), coalesce(col("nr2"), col("new_root")).as("new_root"))
         .unionByName(keptRel.toSeq.toDF("old_root", "new_root"))
-      val tmp = new org.apache.hadoop.fs.Path(relabelsPath(stateDir) + ".tmp")
-      val out = new org.apache.hadoop.fs.Path(relabelsPath(stateDir))
-      composed.write.mode("overwrite").parquet(tmp.toString)
-      FsUtils.replaceDir(fs, tmp, out)
-      spark.catalog.refreshByPath(relabelsPath(stateDir))
+      StateLog.swapWrite(spark, relabelsPath(stateDir), composed, coalesce1 = false)
     }
 
     // commit 2 (idempotent dir append): every non-root endpoint's star row
@@ -231,12 +227,8 @@ object ComponentsStream {
     val finalRows = endpoints.iterator
       .map(id => (id, finalRoot.getOrElse(root(id), root(id))))
       .filter { case (id, c) => id != c }.toSeq
-      .toDF("id", "component").coalesce(1)
-    val tmpStars = new org.apache.hadoop.fs.Path(s"${starsPath(stateDir)}.tmp-batch-$batchId")
-    finalRows.write.mode("overwrite").parquet(tmpStars.toString)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(starsPath(stateDir)))
-    FsUtils.renameOrThrow(fs, tmpStars, starsDst)
-    spark.catalog.refreshByPath(starsPath(stateDir))
+      .toDF("id", "component")
+    StateLog.commitBatchDir(spark, starsPath(stateDir), batchId, finalRows)
     if (autoCompactBytes > 0 && FsUtils.dataBytes(fs,
         new org.apache.hadoop.fs.Path(relabelsPath(stateDir))) > autoCompactBytes)
       compactState(spark, stateDir)
@@ -291,10 +283,8 @@ object ComponentsStream {
       .groupBy("id").agg(min("component").as("component"))
     // keep the folded log under the max seen batch= dir so partition
     // discovery stays uniform (cf. ReservoirStream.compactState)
-    val tmp = new org.apache.hadoop.fs.Path(starsPath(stateDir) + ".tmp")
-    resolved.write.mode("overwrite").parquet(s"$tmp/batch=$maxBatch")
-    FsUtils.replaceDir(fs, tmp, sPath)
-    spark.catalog.refreshByPath(starsPath(stateDir))
+    StateLog.swapWrite(spark, starsPath(stateDir), resolved, coalesce1 = false,
+      subdir = Some(s"batch=$maxBatch"))
     fs.delete(new org.apache.hadoop.fs.Path(relabelsPath(stateDir)), true)
     spark.catalog.refreshByPath(relabelsPath(stateDir))
   }

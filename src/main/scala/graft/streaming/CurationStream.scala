@@ -30,14 +30,14 @@ import graft.functions.FsUtils
   * passes the stateless quality/language gates.
   *
   * Commit order per batch: curated rows land in `outDir/batch=<id>` via
-  * temp-swap FIRST, state appends second. Replay after a crash is safe at
-  * every boundary: before the output rename the state is untouched and the
-  * batch recomputes identically; after it, the existing `batch=<id>` dir is
-  * detected and skipped while the idempotent state appends re-run (an
-  * already-appended batch contributes nothing new — its hashes are no
-  * longer "fresh"). The one non-ideal window: a crash between the hash
-  * append and the bucket append loses the batch's band rows, which can
-  * only OVER-keep later near-dups, never drop kept rows.
+  * [[StateLog.commitBatchDir]] FIRST, state appends second. Replay after a
+  * crash is safe at every boundary: before the output rename the state is
+  * untouched and the batch recomputes identically; after it, the existing
+  * `batch=<id>` dir is detected and skipped while the idempotent state
+  * appends re-run (an already-appended batch contributes nothing new —
+  * its hashes are no longer "fresh"). The one non-ideal window: a crash
+  * between the hash append and the bucket append loses the batch's band
+  * rows, which can only OVER-keep later near-dups, never drop kept rows.
   *
   * Consistency contract (CurationStreamSpec): when docs arrive in id order
   * — the backfill/replay case — the accumulated output row set EQUALS the
@@ -54,13 +54,6 @@ object CurationStream {
 
   private val Bands = 8
   private val NumPerm = 64
-
-  /** Temp-swap overwrite for [[compactState]] (the compacted table is
-    * derived from the files the swap deletes — tmp is written first, while
-    * they still exist; [[StateLog.swapWrite]]'s refresh also evicts the
-    * session-shared FileStatusCache entries for the deleted files). */
-  private def swapWrite(spark: SparkSession, df: DataFrame, path: String): Unit =
-    StateLog.swapWrite(spark, path, df, coalesce1 = false)
 
   /** One collected batch document: its row (the five output columns
     * after `doc_id`, then the fold's keys and gate verdict), its id as a
@@ -168,16 +161,7 @@ object CurationStream {
       outSchema).coalesce(1)
 
     // --- commit: output FIRST (idempotent), state appends second ----------
-    outDir.foreach { d =>
-      val fs = FsUtils.fs(spark, d)
-      val dst = new org.apache.hadoop.fs.Path(s"$d/batch=$batchId")
-      if (!fs.exists(dst)) {
-        val tmp = new org.apache.hadoop.fs.Path(s"$d.tmp-batch-$batchId")
-        result.write.mode("overwrite").parquet(tmp.toString)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(d))
-        FsUtils.renameOrThrow(fs, tmp, dst)
-      }
-    }
+    outDir.foreach(StateLog.commitBatchDir(spark, _, batchId, result))
     // an empty append adds nothing, so it is skipped (a full replay writes
     // no state at all)
     if (fresh.nonEmpty)
@@ -215,16 +199,18 @@ object CurationStream {
     val hashesPath = s"$stateDir/hashes"
     val bucketsPath = s"$stateDir/buckets"
     val fs = FsUtils.fs(spark, hashesPath)
+    // each table's tmp is written in full before the swap deletes the
+    // files it was derived from
     if (fs.exists(new org.apache.hadoop.fs.Path(hashesPath)))
-      swapWrite(spark,
+      StateLog.swapWrite(spark, hashesPath,
         spark.read.parquet(hashesPath)
           .groupBy("content_hash").agg(min("owner_id").as("owner_id")),
-        hashesPath)
+        coalesce1 = false)
     if (fs.exists(new org.apache.hadoop.fs.Path(bucketsPath)))
-      swapWrite(spark,
+      StateLog.swapWrite(spark, bucketsPath,
         spark.read.parquet(bucketsPath)
           .groupBy("band_idx", "band_key").agg(min("doc_id").as("doc_id")),
-        bucketsPath)
+        coalesce1 = false)
   }
 
   /** File-source streaming wrapper: document parquet drops in `inDir` →

@@ -53,19 +53,11 @@ object DecontamStream {
     * the batch's training docs against the accumulated state. Idempotent
     * per batchId — a replay whose state dir survived skips the state
     * rewrite (deterministic content) and re-derives only its output. */
-  /** @param stateWriteParts files per state/output write — O(batch
-    *   shingles) / O(batch docs) rows; raise it if a huge benchmark drop
-    *   would serialize the single write task (cf.
-    *   [[OverviewStream.applyBatch]]). */
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
-      stateDir: String, outDir: String, stateWriteParts: Int = 1,
-      autoCompactBatches: Int = 0): Unit = {
+      stateDir: String, outDir: String, autoCompactBatches: Int = 0): Unit = {
     val lg = log(spark, stateDir)
     if (!lg.alreadyApplied(batchId))
-      lg.commitBatch(
-        Prep.benchShingleHashes(batch.filter(Prep.isBenchDoc))
-          .coalesce(stateWriteParts),
-        batchId, coalesce1 = false)
+      lg.commitBatch(Prep.benchShingleHashes(batch.filter(Prep.isBenchDoc)), batchId)
     // state ≤ this batch: same-batch benchmark docs apply to same-batch
     // training docs (matches the batch query when everything arrives at
     // once), later batches are invisible so a replay is byte-identical;
@@ -73,7 +65,7 @@ object DecontamStream {
     // state in several batches
     val bench = benchState(spark, stateDir, uptoBatch = batchId).distinct()
     Prep.decontaminateAgainst(batch.filter(!Prep.isBenchDoc), bench)
-      .coalesce(stateWriteParts)
+      .coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     lg.maybeAutoCompact(autoCompactBatches)(compactState(spark, stateDir))
   }

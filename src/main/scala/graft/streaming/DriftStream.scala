@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.functions.FsUtils
 import graft.operators.Monitor
 
 /** Continuous per-source drift monitoring — the streaming twin of
@@ -48,18 +47,11 @@ object DriftStream {
                  grid: Option[(Double, Double)], nBuckets: Int,
                  valueCol: String = "n_chars",
                  sourceCol: String = "source"): (String, String, Option[(Double, Double)], Int) = {
+    import spark.implicits._
     log(spark, stateDir).recoverSwaps()
-    val fs = FsUtils.fs(spark, stateDir)
-    val out = new org.apache.hadoop.fs.Path(gridPath(stateDir))
-    if (!fs.exists(out)) {
-      import spark.implicits._
-      val tmp = new org.apache.hadoop.fs.Path(gridPath(stateDir) + ".tmp-init")
+    StateLog.commitOnce(spark, gridPath(stateDir), gridPath(stateDir) + ".tmp-init",
       Seq((valueCol, sourceCol, grid.map(_._1), grid.map(_._2), nBuckets))
-        .toDF("value_col", "source_col", "mn", "mx", "k")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      fs.mkdirs(out.getParent)
-      FsUtils.renameOrThrow(fs, tmp, out)
-    }
+        .toDF("value_col", "source_col", "mn", "mx", "k"))
     activeGrid(spark, stateDir)
   }
 

@@ -269,10 +269,11 @@ object EmbeddingIndexStream {
     * Commit discipline: tombstones are USER-invoked, not stream-replayed,
     * so a crash mid-write would otherwise leave a partial `batch=` dir
     * that [[tombstoneCeilings]] reads as committed — some deleted ids
-    * staying live with no replay to heal them. The write therefore lands
-    * in a hidden `.tmp-batch-<id>` dir and the RENAME is the commit point
-    * (the StateLog.commitBatch pattern); a stale tmp from a crashed
-    * attempt is replaced wholesale on the next call. */
+    * staying live with no replay to heal them. The write therefore goes
+    * through [[StateLog.commitBatchDir]]: the RENAME of the hidden
+    * `.tombstones.tmp-batch-<id>` dir is the commit point, a stale tmp
+    * from a crashed attempt is overwritten by the next call, and a call
+    * for an already-committed batch id changes nothing. */
   def tombstone(spark: SparkSession, ids: DataFrame, batchId: Long,
                 indexDir: String, ceiling: Option[Long] = None): Unit =
     tombstoneRows(spark,
@@ -545,19 +546,10 @@ object EmbeddingIndexStream {
   /** [[tombstone]] with caller-supplied per-row ceilings — `rows` must be
     * (vec_id, ceiling). Same commit discipline. */
   def tombstoneRows(spark: SparkSession, rows: DataFrame, batchId: Long,
-                    indexDir: String): Unit = {
-    val base = tombstonesPath(indexDir)
-    val fs = FsUtils.fs(spark, base)
-    val tmp = new Path(base, s".tmp-batch-$batchId")
-    val dst = new Path(base, s"batch=$batchId")
-    rows.select(col("vec_id").cast("long").as("vec_id"),
-        col("ceiling").cast("long").as("ceiling")).distinct()
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(tmp.toString)
-    FsUtils.replaceDir(fs, tmp, dst)
-    spark.catalog.refreshByPath(base)
-  }
+                    indexDir: String): Unit =
+    StateLog.commitBatchDir(spark, tombstonesPath(indexDir), batchId,
+      rows.select(col("vec_id").cast("long").as("vec_id"),
+        col("ceiling").cast("long").as("ceiling")).distinct())
 
   // --- recluster (round 17): the lifecycle's maintenance verb ---------------
   //

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.functions.FsUtils
 import graft.operators.Profile
 
 /** Streaming distribution monitoring — the frozen-grid fold of
@@ -44,18 +43,11 @@ object HistogramStream {
   def ensureGrid(spark: SparkSession, stateDir: String,
                  grid: Seq[(String, Option[(Double, Double)])],
                  nBuckets: Int): Seq[(String, Option[(Double, Double)])] = {
+    import spark.implicits._
     log(spark, stateDir).recoverSwaps()
-    val fs = FsUtils.fs(spark, stateDir)
-    val out = new org.apache.hadoop.fs.Path(gridPath(stateDir))
-    if (!fs.exists(out)) {
-      import spark.implicits._
-      val tmp = new org.apache.hadoop.fs.Path(gridPath(stateDir) + ".tmp-init")
+    StateLog.commitOnce(spark, gridPath(stateDir), gridPath(stateDir) + ".tmp-init",
       grid.map { case (c, b) => (c, b.map(_._1), b.map(_._2), nBuckets) }
-        .toDF("col_name", "mn", "mx", "k")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      fs.mkdirs(out.getParent)
-      FsUtils.renameOrThrow(fs, tmp, out)
-    }
+        .toDF("col_name", "mn", "mx", "k"))
     activeGrid(spark, stateDir)._1
   }
 

@@ -392,23 +392,14 @@ object LexStatsStream {
         .drop("ts_batch")
 
   /** Commit one batch of (doc_id, ceiling) tombstone rows. USER-invoked,
-    * not stream-replayed, so the write lands in a hidden tmp dir and the
-    * RENAME is the commit point (the [[EmbeddingIndexStream.tombstoneRows]]
-    * discipline); idempotent per batchId. */
+    * not stream-replayed, so the write goes through
+    * [[StateLog.commitBatchDir]] (the [[EmbeddingIndexStream.tombstoneRows]]
+    * discipline): committed once per batchId. */
   def tombstoneDocRows(spark: SparkSession, rows: DataFrame, batchId: Long,
-                       stateDir: String): Unit = {
-    val base = tombPath(stateDir)
-    val fs = FsUtils.fs(spark, base)
-    val tmp = new Path(base, s".tmp-batch-$batchId")
-    val dst = new Path(base, s"batch=$batchId")
-    rows.select(col("doc_id").cast("long").as("doc_id"),
-        col("ceiling").cast("long").as("ceiling")).distinct()
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(tmp.toString)
-    FsUtils.replaceDir(fs, tmp, dst)
-    spark.catalog.refreshByPath(base)
-  }
+                       stateDir: String): Unit =
+    StateLog.commitBatchDir(spark, tombPath(stateDir), batchId,
+      rows.select(col("doc_id").cast("long").as("doc_id"),
+        col("ceiling").cast("long").as("ceiling")).distinct())
 
   /** The hidden-generation view the correction batches subtract: posting
     * rows of `ids` that are live under the CURRENT ceilings and hidden by
@@ -461,8 +452,9 @@ object LexStatsStream {
     * the generations this call newly hides, then the ceiling tombstones.
     * From that instant [[currentStats]] equals the one-shot aggregate over
     * the live corpus and every posting read excludes the docs. Idempotent
-    * per batchId (stats guard + deterministic tombstone overwrite); a crash
-    * between the two commits heals on the replay.
+    * per batchId (stats guard + the tombstone commit, skipped when
+    * `.lextomb/batch=<id>` exists); a crash between the two commits heals
+    * on the replay.
     *
     * @param ceiling hide the docs' rows ingested in batches ≤ this
     *   (defaults to `batchId` — a plain delete). An update passes
@@ -497,9 +489,10 @@ object LexStatsStream {
     * added — PROVIDED the old snapshot is what the index serves (the
     * snapshot-diff contract: one live generation per doc, updates always
     * through this verb, never bare re-ingests). Replay-idempotent per
-    * batchId: both logs' guards + the deterministic tombstone overwrite —
-    * every commit's content derives from the SNAPSHOTS, never from current
-    * state, so a replay recommits identical state in any crash window.
+    * batchId: both logs' guards + the tombstone commit, skipped when
+    * `.lextomb/batch=<id>` exists — every commit's content derives from
+    * the SNAPSHOTS, never from current state, so a replay commits only
+    * what a crash left out, and identically.
     *
     * Commit ORDER (round-19 review): tombstones → postings → stats.
     * Every order leaves some transient crash window; this one picks the

@@ -61,17 +61,16 @@ object OverlapStream {
     * (deterministic content) and re-derives only its output snapshot. */
   def applyBatch(spark: SparkSession, batch: DataFrame, batchId: Long,
       stateDir: String, outDir: String, numPerm: Int = 128,
-      stateWriteParts: Int = 1, autoCompactBatches: Int = 0): Unit = {
+      autoCompactBatches: Int = 0): Unit = {
     val lg = log(spark, stateDir)
     if (!lg.alreadyApplied(batchId))
       lg.commitBatch(
         CorpusOverlap.sliceSignatures(
-            CorpusOverlap.sliceVocab(batch, "text", "source"), numPerm)
-          .coalesce(stateWriteParts),
-        batchId, coalesce1 = false)
+          CorpusOverlap.sliceVocab(batch, "text", "source"), numPerm),
+        batchId)
     CorpusOverlap.estimateFromSignatures(
         mergedState(spark, stateDir, uptoBatch = batchId), numPerm)
-      .coalesce(stateWriteParts)
+      .coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
     lg.maybeAutoCompact(autoCompactBatches)(compactState(spark, stateDir))
   }

@@ -93,11 +93,8 @@ object ReservoirStream {
       .orderBy(col("wkey").desc, col("doc_id"))
       .limit(n)
       .select("source", "doc_id", "n_tokens", "wkey") // not the batch col
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val out = new org.apache.hadoop.fs.Path(path)
-    folded.write.mode("overwrite").parquet(s"$tmp/batch=$maxBatch")
-    FsUtils.replaceDir(fs, tmp, out)
-    spark.catalog.refreshByPath(path)
+    StateLog.swapWrite(spark, path, folded, coalesce1 = false,
+      subdir = Some(s"batch=$maxBatch"))
   }
 
   private def emptyLike(spark: SparkSession): DataFrame = {

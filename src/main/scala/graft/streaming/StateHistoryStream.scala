@@ -115,7 +115,6 @@ object StateHistoryStream {
                  autoCompactBatches: Int = 0): Boolean = {
     recoverSwaps(spark, stateDir)
     if (batchId <= lastApplied(spark, stateDir)) return false
-    val fs = FsUtils.fs(spark, stateDir)
 
     // checkpointed: bruns feeds BOTH the closed-rows write and the open-MV
     // rewrite — unmaterialized, the batch scan + window would run twice
@@ -158,9 +157,7 @@ object StateHistoryStream {
     // the replay recomputes identical rows (see scaladoc), keeping is the
     // idempotent choice
     val closedLog = new StateLog(spark, stateDir, "closed")
-    if (!fs.exists(new org.apache.hadoop.fs.Path(
-        s"${closedPath(stateDir)}/batch=$batchId")))
-      closedLog.commitBatch(closedRows, batchId)
+    closedLog.commitBatch(closedRows, batchId)
     // 2. open MV swap = watermark advance, one atomic rename
     StateLog.swapWrite(spark, openPath(stateDir), newOpen)
     StateLog.release(newOpen)

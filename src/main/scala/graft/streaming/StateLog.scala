@@ -5,12 +5,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.FsUtils
 
-/** The package-wide parquet state-log commit discipline, extracted from the
-  * streams that grew it hand-copied (ProfileStream, SubstringDedupStream,
-  * BpeStream, HashedModelStream, HistogramStream, DriftStream,
-  * AnomalyStream, QualityStream, RetentionStream — see each stream's
-  * scaladoc for the per-operator replay argument). One instance manages one
-  * append-only log of per-batch state dirs under `stateDir/logName`:
+/** The package-wide parquet state commit discipline: the one module that
+  * knows how streaming state is committed and healed. Users: the log
+  * streams (ProfileStream, SubstringDedupStream, BpeStream,
+  * HashedModelStream, HistogramStream, DriftStream, AnomalyStream,
+  * QualityStream, RetentionStream, CdcStream, LexStatsStream,
+  * DecontamStream, OverlapStream, ReservoirStream, OverviewStream,
+  * StateHistoryStream), the batch-dir commits of CurationStream's output,
+  * ComponentsStream's star log and the two tombstone logs
+  * (EmbeddingIndexStream, LexStatsStream), the grid commits of
+  * HistogramStream and DriftStream, and the whole-dir swaps of
+  * FunnelStream, StateHistoryStream, CurationStream, ComponentsStream and
+  * ReservoirStream (see each stream's scaladoc for its replay argument).
+  * One instance manages one append-only log of per-batch state dirs under
+  * `stateDir/logName`:
   *
   *  - `batch=<id>` dirs accumulate one deterministic state write per
   *    micro-batch; the dir's presence is the batch's commit marker, so its
@@ -18,15 +26,18 @@ import graft.functions.FsUtils
   *    ([[alreadyApplied]]).
   *  - [[compact]] folds all batch dirs into `batch=-1` — a dir no
   *    foreachBatch id can ever target. For NON-idempotent state (counts),
-  *    a `foldmeta` watermark (folded-through batch id) is temp-swapped into
-  *    place BEFORE the log swap, so a replay of an already-folded batch is
-  *    skipped via the watermark even though its dir is gone; for lossless
-  *    idempotent folds the caller disables the watermark.
+  *    a `foldmeta` watermark (folded-through batch id, the name of a marker
+  *    file, so reading it is a listing and no Spark job) is temp-swapped
+  *    into place BEFORE the log swap, so a replay of an already-folded
+  *    batch is skipped via the watermark even though its dir is gone; for
+  *    lossless idempotent folds the caller disables the watermark.
   *  - every crash window is covered: a crash between the watermark and the
   *    log swap leaves un-folded dirs whose re-fold is deterministic; a
   *    crash INSIDE a temp-swap (after delete(dst), before rename) leaves
   *    `dst.tmp` as the sole copy, and [[recoverSwaps]] — called on entry by
-  *    every public reader/writer — completes the rename.
+  *    every public reader/writer — completes the rename. A `dst.tmp` that
+  *    never finished its write (a crash or abort before the write's job
+  *    committed) is deleted instead, never landed.
   *
   * Single-writer discipline is the package contract: one driver folds a
   * given `stateDir`, exactly as Structured Streaming runs one foreachBatch
@@ -55,11 +66,17 @@ final class StateLog(
   def recoverSwaps(): Unit =
     StateLog.healSwaps(spark, (logPath +: foldmetaPath +: sidecarNames.map(sidecarPath)): _*)
 
-  /** Highest batch id folded into `batch=-1` (−1 when never compacted). */
+  /** Highest batch id folded into `batch=-1` (−1 when never compacted):
+    * the name of the marker file inside `foldmeta`, so the replay guard
+    * costs a listing and no Spark job. */
   def foldedUpto(): Long = {
     recoverSwaps()
-    if (!fs.exists(new Path(foldmetaPath))) -1L
-    else spark.read.parquet(foldmetaPath).agg(max("folded_upto")).head().getLong(0)
+    val fm = new Path(foldmetaPath)
+    if (!fs.exists(fm)) -1L
+    else fs.listStatus(fm).map(_.getPath.getName)
+      .collect { case n if n.startsWith(StateLog.UptoMarker) =>
+        n.stripPrefix(StateLog.UptoMarker).toLong }
+      .foldLeft(-1L)(math.max)
   }
 
   /** The replay guard: the batch dir survived a prior delivery, or the
@@ -105,22 +122,11 @@ final class StateLog(
       }
   }
 
-  /** Commit one batch's own state rows: write to a batch-scoped temp dir,
-    * then rename into `batch=<id>` — the rename IS the batch's commit
-    * point, so every preceding step replays deterministically.
-    * `partitionByCols` writes the batch dir partitioned (the postings-log
-    * shape: readers partition-prune inside every batch dir). */
+  /** Commit one batch's own state rows ([[StateLog.commitBatchDir]] on
+    * this log). */
   def commitBatch(own: DataFrame, batchId: Long, coalesce1: Boolean = true,
-                  partitionByCols: Seq[String] = Nil): Unit = {
-    val f = fs
-    val tmp = new Path(s"$logPath.tmp-batch-$batchId")
-    val w = (if (coalesce1) own.coalesce(1) else own).write.mode("overwrite")
-    (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w)
-      .parquet(tmp.toString)
-    f.mkdirs(new Path(logPath))
-    FsUtils.renameOrThrow(f, tmp, new Path(s"$logPath/batch=$batchId"))
-    spark.catalog.refreshByPath(logPath)
-  }
+                  partitionByCols: Seq[String] = Nil): Unit =
+    StateLog.commitBatchDir(spark, logPath, batchId, own, coalesce1, partitionByCols)
 
   /** Number of `batch=*` dirs in the log (the listing-cost metric the
     * auto-compaction trigger bounds). */
@@ -183,13 +189,16 @@ final class StateLog(
     val maxBatch = maxBatchId()
     if (maxBatch < 0 && !force) return
     if (skipAboveWatermark.exists(applied => maxBatch > applied)) return
+    // the tmp write below finishes before the swap deletes any source
     val folded = fold(spark.read.parquet(logPath))
-      .localCheckpoint(true) // materialize BEFORE the swap deletes sources
     if (watermark && maxBatch >= 0) {
-      import spark.implicits._
-      StateLog.swapWrite(spark, foldmetaPath, Seq(maxBatch).toDF("folded_upto"))
+      val tmp = new Path(foldmetaPath + ".tmp")
+      f.delete(tmp, true)
+      f.create(new Path(tmp, StateLog.UptoMarker + maxBatch)).close()
+      FsUtils.replaceDir(f, tmp, new Path(foldmetaPath))
     }
     val tmp = new Path(logPath + ".tmp")
+    f.delete(tmp, true)
     val w = (if (coalesce1) folded.coalesce(1) else folded)
       .write.mode("overwrite")
     (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w)
@@ -197,26 +206,71 @@ final class StateLog(
     beforeSwap(tmp.toString)
     FsUtils.replaceDir(f, tmp, lp)
     spark.catalog.refreshByPath(logPath)
-    org.apache.spark.sql.graft.DatasetInternals.checkpointedRdd(folded)
-      .foreach(_.unpersist(blocking = false))
   }
 }
 
 object StateLog {
+
+  /** Name prefix of the `foldmeta` marker file; the folded-through batch
+    * id follows it. */
+  private val UptoMarker = "_folded_upto="
 
   /** Complete any interrupted temp-swap at the given paths: `replaceDir`'s
     * crash window between delete(dst) and rename leaves dst missing and
     * `dst.tmp` as the sole surviving copy — without this heal a crash
     * inside a compaction swap would silently zero accumulated state (and an
     * already-committed watermark would suppress the replays that could
-    * rebuild it). */
+    * rebuild it). A `dst.tmp` whose write never finished is deleted
+    * instead: landing it would replace missing state with a partial or
+    * empty table. */
   def healSwaps(spark: SparkSession, paths: String*): Unit =
     paths.foreach { p =>
       val f = FsUtils.fs(spark, p)
       val out = new Path(p)
       val tmp = new Path(p + ".tmp")
-      if (!f.exists(out) && f.exists(tmp)) FsUtils.renameOrThrow(f, tmp, out)
+      if (!f.exists(out) && f.exists(tmp)) {
+        if (finished(f, tmp)) FsUtils.renameOrThrow(f, tmp, out)
+        else f.delete(tmp, true)
+      }
     }
+
+  /** A temp-swap source holds a finished write: at least one file and no
+    * Spark `_temporary` staging dir. A crash before the write's job commit
+    * leaves the staging dir; an aborted write leaves the dir empty. */
+  private def finished(f: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean = {
+    val files = f.listFiles(dir, true)
+    var any = false
+    while (files.hasNext)
+      if (files.next().getPath.toUri.getPath.contains("/_temporary/")) return false
+      else any = true
+    any
+  }
+
+  /** Commit `df` once at `path`: skipped when `path` exists, else written
+    * to `staging` and renamed into place — the rename IS the commit point,
+    * so a crash before it leaves only a stale `staging` that the next call
+    * overwrites. `partitionByCols` writes the dir partitioned. */
+  def commitOnce(spark: SparkSession, path: String, staging: String, df: DataFrame,
+                 coalesce1: Boolean = true, partitionByCols: Seq[String] = Nil): Unit = {
+    val f = FsUtils.fs(spark, path)
+    val dst = new Path(path)
+    if (f.exists(dst)) return
+    val w = (if (coalesce1) df.coalesce(1) else df).write.mode("overwrite")
+    (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w)
+      .parquet(staging)
+    f.mkdirs(dst.getParent)
+    FsUtils.renameOrThrow(f, new Path(staging), dst)
+    spark.catalog.refreshByPath(dst.getParent.toString)
+  }
+
+  /** Commit one batch's rows as `root/batch=<id>` through
+    * `<root>.tmp-batch-<id>` ([[commitOnce]]): a replay of a committed
+    * batch id is skipped, every step before the rename replays
+    * deterministically. */
+  def commitBatchDir(spark: SparkSession, root: String, batchId: Long, df: DataFrame,
+                     coalesce1: Boolean = true, partitionByCols: Seq[String] = Nil): Unit =
+    commitOnce(spark, s"$root/batch=$batchId", s"$root.tmp-batch-$batchId", df,
+      coalesce1, partitionByCols)
 
   /** A state table read with its known schema (no schema-inference job)
     * after [[healSwaps]]; `None` when the table does not exist yet. */
@@ -237,13 +291,19 @@ object StateLog {
   /** Temp-swap a whole dir into place: write `df` to `path.tmp`, then
     * delete-and-rename over `path` — the single-rename MV rewrite every
     * keyed-state stream shares. Crash inside the swap is healed by
-    * [[healSwaps]] on the next access. */
+    * [[healSwaps]] on the next access. `subdir` writes the rows one level
+    * down (`batch=<max>`: a compacted log keeps a uniform `batch=` layout
+    * for partition discovery). A stale `path.tmp` left by an earlier swap
+    * that crashed before its delete is cleared first, so a `subdir` write
+    * never lands beside an old one. */
   def swapWrite(spark: SparkSession, path: String, df: DataFrame,
-                coalesce1: Boolean = true): Unit = {
+                coalesce1: Boolean = true, subdir: Option[String] = None): Unit = {
     val f = FsUtils.fs(spark, path)
     val tmp = new Path(path + ".tmp")
+    healSwaps(spark, path) // a tmp that is the sole copy lands, never dropped
+    f.delete(tmp, true)
     (if (coalesce1) df.coalesce(1) else df)
-      .write.mode("overwrite").parquet(tmp.toString)
+      .write.mode("overwrite").parquet(subdir.fold(tmp.toString)(d => s"$tmp/$d"))
     FsUtils.replaceDir(f, tmp, new Path(path))
     spark.catalog.refreshByPath(path)
   }

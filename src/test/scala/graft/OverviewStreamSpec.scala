@@ -124,7 +124,13 @@ class OverviewStreamSpec extends AnyFunSuite with SparkSuite {
     assert(mvRows(state) == before)
   }
 
-  test("compactState folds committed batches, keeps the newest, MV unchanged") {
+  private val logs = Seq("order_deltas", "seen_customers")
+
+  private def batchDirs(state: String, t: String): Seq[String] =
+    new java.io.File(s"$state/$t").listFiles()
+      .map(_.getName).filter(_.startsWith("batch=")).sorted.toSeq
+
+  test("compaction folds every batch to batch=-1; MV unchanged, replays skipped") {
     val state = tmp()
     val splits = Seq(
       orders.filter(col("o_orderkey") % 5 < 2),
@@ -137,41 +143,63 @@ class OverviewStreamSpec extends AnyFunSuite with SparkSuite {
     val before = mvRows(state)
     OverviewStream.compactState(spark, state)
     assert(mvRows(state) == before)
-    // dirs folded to (consolidated, newest); newest untouched for replay
-    for (t <- Seq("order_deltas", "seen_customers")) {
-      val dirs = new java.io.File(s"$state/$t").listFiles()
-        .map(_.getName).filter(_.startsWith("batch=")).sorted
-      assert(dirs.toSeq == Seq("batch=0", "batch=3"), t)
-    }
-    // replay of the newest batch still works after compaction
+    for (t <- logs) assert(batchDirs(state, t) == Seq("batch=-1"), t)
+    // a replay of a folded batch, newest or oldest, is skipped by the
+    // fold watermark: nothing is rewritten and nothing double-counts
     OverviewStream.applyBatch(spark, splits.last, 3L, state)
+    OverviewStream.applyBatch(spark, splits.head, 0L, state)
     assert(mvRows(state) == before)
+    for (t <- logs) assert(batchDirs(state, t) == Seq("batch=-1"), t)
   }
 
-  test("interrupted compaction (tmp landed, sources deleted) heals on read") {
+  test("a compaction swap crash (log dir deleted, tmp sole copy) heals on read") {
     val state = tmp()
     OverviewStream.applyBatch(spark, orders.filter(col("o_orderkey") % 2 === 0), 0L, state)
     OverviewStream.applyBatch(spark, orders.filter(col("o_orderkey") % 2 === 1), 1L, state)
     val before = mvRows(state)
     OverviewStream.compactState(spark, state)
-    // simulate the crash window by undoing the final rename: consolidated
-    // dir back to its tmp name (tmp present ≡ mid-compaction crash state)
+    // the swap's crash window: the old log is deleted, the folded log is
+    // still under its tmp name
     def crash(): Unit =
-      for (t <- Seq("order_deltas", "seen_customers")) {
-        val root = new java.io.File(s"$state/$t")
-        assert(new java.io.File(root, "batch=0")
-          .renameTo(new java.io.File(root, ".compact-0-1.tmp")))
-      }
+      for (t <- logs)
+        assert(new java.io.File(s"$state/$t").renameTo(new java.io.File(s"$state/$t.tmp")))
     crash()
     assert(mvRows(state) == before)
-    // a batch REPLAY arriving while the state is mid-compaction must heal
-    // before its anti-join — otherwise every replayed customer re-counts
+    // a batch REPLAY arriving in the crash window must heal before its
+    // guard and anti-join — otherwise every replayed customer re-counts
     crash()
     OverviewStream.applyBatch(spark, orders.filter(col("o_orderkey") % 2 === 1), 1L, state)
     assert(mvRows(state) == before)
     val cust = spark.read.parquet(s"$state/seen_customers")
       .select("tenant", "o_custkey")
     assert(cust.count() == cust.distinct().count())
+  }
+
+  test("a compaction that crashes while writing its fold leaves the state intact") {
+    val state = tmp()
+    val splits = (0 until 3).map(i => orders.filter(col("o_orderkey") % 3 === i))
+    splits.zipWithIndex.foreach { case (b, i) =>
+      OverviewStream.applyBatch(spark, b, i.toLong, state)
+    }
+    val before = mvRows(state)
+    intercept[Exception](CrashingCommitProtocol.during(spark, "order_deltas")(
+      OverviewStream.compactState(spark, state)))
+    assert(mvRows(state) == before, "an uncommitted fold must not replace any batch")
+    // a replay in the crash window is skipped, and the next pass completes
+    OverviewStream.applyBatch(spark, splits(1), 1L, state)
+    assert(mvRows(state) == before)
+    OverviewStream.compactState(spark, state)
+    assert(mvRows(state) == before)
+  }
+
+  test("compacting a log of empty batches keeps the state readable") {
+    val state = tmp()
+    OverviewStream.applyBatch(spark, orders.limit(0), 0L, state)
+    OverviewStream.applyBatch(spark, orders.limit(0), 1L, state)
+    OverviewStream.compactState(spark, state)
+    assert(OverviewStream.overview(spark, state).collect().isEmpty)
+    OverviewStream.applyBatch(spark, orders, 2L, state)
+    assert(mvRows(state) == twinRows(orders))
   }
 
   test("overview on fresh (absent) state returns zero tenants") {

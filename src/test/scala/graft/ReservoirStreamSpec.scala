@@ -80,6 +80,31 @@ class ReservoirStreamSpec extends AnyFunSuite with SparkSuite {
     assert(sample(tmp) == expected) // orphan healed on read
   }
 
+  test("a compaction after one that crashed before its swap folds only the live log") {
+    val docs = Tables.documents(spark, Sf0001)
+    val part = (i: Int) => docs.filter(pmod(col("doc_id"), lit(4)) === i)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-res-stale").toString
+    val side = java.nio.file.Files.createTempDirectory("graft-res-side").toString
+    (0 to 1).foreach { i =>
+      ReservoirStream.applyBatch(spark, part(i), i.toLong, tmp, N)
+      ReservoirStream.applyBatch(spark, part(i), i.toLong, side, N)
+    }
+    // the crash window of a compaction at maxBatch 1: its complete fold sits
+    // in candidates.tmp/batch=1, the live dir not yet deleted
+    ReservoirStream.compactState(spark, side, N)
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val fs = graft.functions.FsUtils.fs(spark, tmp)
+    assert(FileUtil.copy(fs, new Path(s"$side/candidates"), fs,
+      new Path(s"$tmp/candidates.tmp"), false, spark.sparkContext.hadoopConfiguration))
+    (2 to 3).foreach(i => ReservoirStream.applyBatch(spark, part(i), i.toLong, tmp, N))
+    ReservoirStream.compactState(spark, tmp, N)
+    val dirs = fs.listStatus(new Path(s"$tmp/candidates"))
+      .map(_.getPath.getName).filter(_.startsWith("batch="))
+    assert(dirs.toSeq == Seq("batch=3"))
+    assert(spark.read.parquet(s"$tmp/candidates").count() <= N)
+    assert(sample(tmp) == batchTwin())
+  }
+
   test("file-source streaming wrapper folds to the exact batch sample") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-res-stream").toString
     val docs = Tables.documents(spark, Sf0001)

@@ -156,4 +156,50 @@ class StateLogSpec extends AnyFunSuite with SparkSuite {
     // the documented post-compaction caveat: -1 ≤ everything
     assert(upto(0L) == Map(0L -> 1L, 1L -> 1L, 2L -> 1L))
   }
+
+  test("recoverSwaps deletes an unfinished tmp instead of landing it") {
+    val st = tmp()
+    val fs = graft.functions.FsUtils.fs(spark, st)
+    log(st).commitBatch(batch(1L -> 4L), 0)
+    // a crash during the first watermark write, before its job committed:
+    // only the staging dir exists
+    assert(fs.mkdirs(new org.apache.hadoop.fs.Path(s"$st/foldmeta.tmp/_temporary/0")))
+    assert(!log(st).alreadyApplied(1))
+    assert(log(st).foldedUpto() == -1L)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$st/foldmeta.tmp")))
+    // the same for a real first swapWrite that dies at its job commit
+    intercept[Exception](CrashingCommitProtocol.during(spark, "mv.tmp")(
+      StateLog.swapWrite(spark, s"$st/mv", batch(1L -> 1L))))
+    assert(StateLog.readKnown(spark, s"$st/mv", batch().schema).isEmpty)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$st/mv.tmp")))
+  }
+
+  test("job budget: alreadyApplied reads the fold watermark without a Spark job") {
+    val st = tmp()
+    val lg = log(st)
+    (0 to 1).foreach(i => lg.commitBatch(batch(1L -> 1L), i))
+    lg.compact(_.groupBy("k").agg(sum("n").as("n")))
+    lg.commitBatch(batch(1L -> 1L), 2)
+    var applied = Seq.empty[Boolean]
+    assert(jobsOf { applied = Seq(0L, 2L, 3L).map(lg.alreadyApplied) } == 0)
+    assert(applied == Seq(true, true, false))
+  }
+
+  test("tombstone verbs commit once: a re-call for a committed batch id changes nothing") {
+    val st = tmp()
+    def files(dir: String): Seq[(String, Long, Long)] =
+      new java.io.File(dir).listFiles().toSeq
+        .map(f => (f.getName, f.length, f.lastModified)).sortBy(_._1)
+    def ids(n: Long*) = n.toDF("id")
+    streaming.EmbeddingIndexStream.tombstone(spark, ids(1L, 2L), 3L, st)
+    streaming.LexStatsStream.tombstoneDocRows(spark,
+      ids(1L, 2L).select(col("id").as("doc_id"), lit(3L).as("ceiling")), 3L, st)
+    val committed = Seq(s"$st/.tombstones/batch=3", s"$st/.lextomb/batch=3").map(files)
+    streaming.EmbeddingIndexStream.tombstone(spark, ids(9L), 3L, st)
+    streaming.LexStatsStream.tombstoneDocRows(spark,
+      ids(9L).select(col("id").as("doc_id"), lit(3L).as("ceiling")), 3L, st)
+    assert(Seq(s"$st/.tombstones/batch=3", s"$st/.lextomb/batch=3").map(files) == committed)
+    assert(streaming.EmbeddingIndexStream.tombstoneIds(spark, st)
+      .as[Long].collect().toSet == Set(1L, 2L))
+  }
 }
