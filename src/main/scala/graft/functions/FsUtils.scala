@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Filesystem helpers for the parquet-pure swap/commit patterns. */
+/** Filesystem helpers. Swapping state into place, and healing a crashed
+  * swap, is `graft.streaming.StateLog`'s job alone. */
 object FsUtils {
 
   /** Hadoop's Path parser is lenient where java.net.URI is strict — a
@@ -19,14 +20,6 @@ object FsUtils {
   def renameOrThrow(fs: FileSystem, src: Path, dst: Path): Unit =
     if (!fs.rename(src, dst))
       throw new java.io.IOException(s"rename failed: $src -> $dst")
-
-  /** The delete-then-rename step every temp-swap site shares. The crash
-    * window between delete and rename leaves `src` as the recovery orphan —
-    * callers own the (site-specific) recovery scan. */
-  def replaceDir(fs: FileSystem, src: Path, dst: Path): Unit = {
-    fs.delete(dst, true)
-    renameOrThrow(fs, src, dst)
-  }
 
   /** Total data-file bytes under `path` (recursive, `_`-prefixed metadata
     * excluded) — the byte-size trigger metric for log-structured state

@@ -107,7 +107,7 @@ object ImageAnn {
            cents: Seq[(Int, Seq[Long])], queries: Seq[(Long, Seq[Long])],
            k: Int, nprobe: Int): DataFrame = {
     val (probes, probed) = probeFrames(spark, cents, queries, nprobe)
-    val cands = spark.read.parquet(indexDir)
+    val cands = graft.streaming.EmbeddingIndexStream.readRaw(spark, indexDir)
       .filter(col("cluster").isin(probed: _*))
       .select(col("doc_id"), col("v"), col("cluster"))
     scoreTail(probes, cands, k)
@@ -196,7 +196,7 @@ object ImageAnn {
     import graft.streaming.EmbeddingIndexStream
     val (probes, probed) = probeFrames(spark, cents, queries, nprobe)
     val cands = Similarity.latestIngest(EmbeddingIndexStream.applyCeilings(
-        spark.read.parquet(indexDir).drop("batch")
+        EmbeddingIndexStream.readIndex(spark, indexDir)
           .filter(col("cluster").isin(probed: _*)),
         EmbeddingIndexStream.tombstoneCeilings(spark, indexDir)))
       .select(col("vec_id").as("doc_id"), col("v"), col("cluster"))
@@ -217,7 +217,7 @@ object ImageAnn {
     import graft.streaming.EmbeddingIndexStream
     val (probes, probed) = probeFrames(spark, cents, queries, nprobe)
     val cands = Similarity.latestIngest(EmbeddingIndexStream.applyCeilings(
-        spark.read.parquet(indexDir)
+        EmbeddingIndexStream.readRaw(spark, indexDir)
           .filter(col("cluster").isin(probed: _*) && col("batch") <= asOfBatch)
           .filter(col("src_batch") <= asOfBatch)
           .drop("batch"),
@@ -277,6 +277,7 @@ object ImageAnn {
     * once [[reseedIndex]] has run, else the caller's initial seeds. */
   def indexQuantizer(spark: SparkSession, indexDir: String,
                      initial: => Seq[(Int, Seq[Long])]): Seq[(Int, Seq[Long])] = {
+    graft.streaming.EmbeddingIndexStream.healIndex(spark, indexDir)
     val p = quantizerPath(indexDir)
     if (graft.functions.FsUtils.fs(spark, p)
         .exists(new org.apache.hadoop.fs.Path(p)))
@@ -293,54 +294,35 @@ object ImageAnn {
     * grows — K ∝ N keeps per-list candidates flat), not float means, so
     * every post-reseed read stays integer-exact and oracle-replayable.
     *
-    * Crash safety is the reclusterIndex discipline verbatim: full rewrite
-    * into a sibling `.reseed-tmp` + `_RESEED_READY` marker before the
-    * swap; a marked tmp with no index dir IS the swap's redo log, an
-    * unmarked one is deleted. Tombstones carry into the new dir still
-    * ARMED (a replayed ingest batch may rewrite a tombstoned id);
-    * src_batch is preserved through the rewrite so those ceilings keep
-    * resolving. Requires the maintenance window (no concurrent writer). */
+    * Crash safety is the reclusterIndex discipline: the new dir replaces
+    * the old one through `StateLog.swapDir`, and every index read heals a
+    * crash inside that swap. An earlier reseed's swap healed on entry
+    * carries that call's quantizer, not `newCents`, so this call reseeds
+    * anyway. Tombstones carry into the new dir still ARMED (a replayed
+    * ingest batch may rewrite a tombstoned id); src_batch is preserved
+    * through the rewrite so those ceilings keep resolving. Requires the
+    * maintenance window (no concurrent writer). */
   def reseedIndex(spark: SparkSession, indexDir: String,
                   newCents: Seq[(Int, Seq[Long])]): Unit = {
-    import graft.streaming.EmbeddingIndexStream
-    val fs = graft.functions.FsUtils.fs(spark, indexDir)
-    val base = new org.apache.hadoop.fs.Path(indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(base.getParent,
-      base.getName + ".reseed-tmp")
-    val ready = new org.apache.hadoop.fs.Path(tmp, "_RESEED_READY")
-    if (fs.exists(tmp)) {
-      if (!fs.exists(base) && fs.exists(ready)) {
-        // finish the PREVIOUS reseed's interrupted swap, then FALL
-        // THROUGH: the healed install carries the prior call's quantizer,
-        // not this call's newCents — returning here would silently skip
-        // the requested reseed and a caller querying with newCents would
-        // probe the wrong inverted lists (review finding, r20 s2)
-        graft.functions.FsUtils.renameOrThrow(fs, tmp, base)
-        fs.delete(new org.apache.hadoop.fs.Path(base, "_RESEED_READY"), false)
-        spark.catalog.refreshByPath(indexDir)
-      } else fs.delete(tmp, true)
-    }
+    import graft.streaming.{EmbeddingIndexStream, StateLog}
     val live = Similarity.latestIngest(EmbeddingIndexStream.applyCeilings(
-      spark.read.parquet(indexDir).drop("batch"),
+      EmbeddingIndexStream.readIndex(spark, indexDir),
       EmbeddingIndexStream.tombstoneCeilings(spark, indexDir)))
       .select("vec_id", "v", "src_batch")
-    live.withColumn("cluster", clusterExpr(newCents))
-      .repartition(col("cluster"))
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(new org.apache.hadoop.fs.Path(tmp, "batch=-1").toString)
-    saveCentroids(spark, newCents, quantizerPath(tmp.toString))
-    // the machinery's raw read, not a hand-rolled parquet load: it heals
-    // the UNABLE_TO_INFER_SCHEMA crash window (a tombstoneRows that died
-    // between tmp write and swap) and maps the legacy ids-only layout to
-    // ceiling = MaxValue (review finding, r20 s2)
-    val ts = EmbeddingIndexStream.rawTombstones(spark, indexDir)
-    if (!ts.isEmpty) ts.select("vec_id", "ceiling").coalesce(1)
-      .write.mode("overwrite").parquet(s"${tmp.toString}/.tombstones/batch=-1")
-    fs.create(ready, true).close()
-    fs.delete(base, true)
-    graft.functions.FsUtils.renameOrThrow(fs, tmp, base)
-    fs.delete(new org.apache.hadoop.fs.Path(base, "_RESEED_READY"), false)
-    spark.catalog.refreshByPath(indexDir)
+    StateLog.swapDir(spark, indexDir) { tmp =>
+      live.withColumn("cluster", clusterExpr(newCents))
+        .repartition(col("cluster"))
+        .write.mode("overwrite").partitionBy("cluster")
+        .parquet(s"$tmp/batch=-1")
+      saveCentroids(spark, newCents, quantizerPath(tmp))
+      // the machinery's raw read, not a hand-rolled parquet load: it heals
+      // the UNABLE_TO_INFER_SCHEMA crash window (a tombstoneRows that died
+      // between tmp write and swap) and maps the legacy ids-only layout to
+      // ceiling = MaxValue
+      val ts = EmbeddingIndexStream.rawTombstones(spark, indexDir)
+      if (!ts.isEmpty) ts.select("vec_id", "ceiling").coalesce(1)
+        .write.mode("overwrite").parquet(s"$tmp/.tombstones/batch=-1")
+    }
   }
 
   /** The gate row end to end: corpus-wide feature index (built once per

@@ -125,8 +125,10 @@ object Layout {
   }
 
   /** The persisted clustering contract, or None for a pre-meta / plain
-    * table. */
+    * table. Heals a crash inside [[reclusterZOrdered]]'s swap first, so
+    * every maintenance verb (they all start here) sees the whole table. */
   def readZMeta(spark: SparkSession, path: String): Option[ZMeta] = {
+    graft.streaming.StateLog.healSwaps(spark, path)
     val p = new org.apache.hadoop.fs.Path(s"$path/_zmeta")
     if (!graft.functions.FsUtils.fs(spark, path).exists(p)) None
     else {
@@ -178,22 +180,17 @@ object Layout {
   }
 
   /** Full recluster: re-elect the grid from the CURRENT data (appends may
-    * have stretched the value ranges), rewrite the whole table z-ordered,
-    * swap atomically (temp-swap next to the table root; a crash leaves
-    * either the old or the new table, never a mix — the compactPartitions
-    * discipline). */
+    * have stretched the value ranges) and rewrite the whole table
+    * z-ordered through `StateLog.swapDir`: a crash leaves either the old or
+    * the new table, never a mix, and [[readZMeta]] heals a crash inside the
+    * swap. */
   def reclusterZOrdered(spark: SparkSession, path: String,
                         nFilesOpt: Option[Int] = None): Unit = {
-    import graft.functions.FsUtils
     val m = readZMeta(spark, path).getOrElse(throw new IllegalStateException(
       s"$path has no _zmeta — not a writeZOrdered table"))
-    val tmp = path + ".recluster.tmp"
-    writeZOrdered(spark.read.parquet(path), m.colA, m.colB, tmp,
-      nFilesOpt.getOrElse(m.nFiles), m.bits)
-    val fs = FsUtils.fs(spark, path)
-    FsUtils.replaceDir(fs, new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(path))
-    spark.catalog.refreshByPath(path)
+    graft.streaming.StateLog.swapDir(spark, path)(tmp =>
+      writeZOrdered(spark.read.parquet(path), m.colA, m.colB, tmp,
+        nFilesOpt.getOrElse(m.nFiles), m.bits))
   }
 
   /** Gate query: the z-key computation itself over `documents`
@@ -240,6 +237,7 @@ object Layout {
       .select(col("o_orderkey"), col("o_custkey"),
         floor(col("o_totalprice") * 100).cast("long").as("price_c"))
     val path = "/tmp/graft-zorder-idx/" + dir.replaceAll("[^A-Za-z0-9.]", "_")
+    graft.streaming.StateLog.healSwaps(spark, path)
     Similarity.ensureBuilt(path)(
       writeZOrdered(base, "o_custkey", "price_c", path, nFiles))
     val st = base.agg(
@@ -467,9 +465,11 @@ object Layout {
     * partition, and at 100 TB a reader's task count (and the namenode)
     * drowns in them. Rewrites ONLY partitions holding more than
     * `maxFilesPerPartition` files, each coalesced to `targetFiles` files,
-    * via the same per-partition-directory temp-swap as the streaming merge
-    * (crash ⇒ replay-safe: untouched dirs never move, a re-run re-compacts).
-    * Returns the number of partitions compacted.
+    * and lands them through the streaming merge's partition swap
+    * (`StateLog.landPartitions`; `StateLog.healPartitions` on entry
+    * restores a partition a crash left orphaned in staging — untouched
+    * dirs never move, a re-run re-compacts). Returns the number of
+    * partitions compacted.
     *
     * Listing is one driver-side directory scan (O(partitions) — the same
     * metadata a planner lists); row data never leaves executors.
@@ -477,66 +477,21 @@ object Layout {
   def compactPartitions(spark: SparkSession, path: String,
                         maxFilesPerPartition: Int = 8,
                         targetFiles: Int = 1): Int = {
-    import org.apache.hadoop.fs.Path
-    import graft.functions.FsUtils
-    val fs = FsUtils.fs(spark, path)
-    val root = new Path(path)
-    if (!fs.exists(root)) return 0
-    // staging lives OUTSIDE the table root: a `p=a.compact.tmp` dir inside
-    // it would be picked up by partition discovery as an extra partition
-    // value (duplicated rows / partition-type corruption) while a compact
-    // is in flight or after a crash
-    val staging = new Path(path + ".compact.tmp")
-
-    // leaf partition dirs at any nesting depth (partitionBy("date","tenant")
-    // puts the files two levels down — counting only level-1 dirs would
-    // silently no-op on multi-level tables)
-    def leafDirs(dir: Path): Seq[Path] = {
-      val subs = fs.listStatus(dir).filter(st =>
-        st.isDirectory && st.getPath.getName.contains("="))
-      if (subs.isEmpty) Seq.empty
-      else subs.flatMap { st =>
-        val deeper = leafDirs(st.getPath)
-        if (deeper.isEmpty) Seq(st.getPath) else deeper
-      }.toSeq
-    }
-    // listStatus returns scheme-qualified paths (file:/...) while the args
-    // may be bare — compare URI paths, never raw strings: a failed
-    // stripPrefix would leave an ABSOLUTE child and `new Path(staging,
-    // absolute)` resolves to the partition itself (the tmp write would
-    // clobber the very directory being read)
-    def rel(base: Path, p: Path): String = {
-      val b = fs.makeQualified(base).toUri.getPath
-      val c = fs.makeQualified(p).toUri.getPath
-      require(c.startsWith(b + "/"), s"$p not under $base")
-      c.stripPrefix(b).stripPrefix("/")
-    }
-
-    // recover partitions orphaned by a crash between delete and rename
-    if (fs.exists(staging)) {
-      leafDirs(staging).foreach { orphan =>
-        val dst = new Path(root, rel(staging, orphan))
-        if (!fs.exists(dst)) {
-          fs.mkdirs(dst.getParent)
-          FsUtils.renameOrThrow(fs, orphan, dst)
-        }
-      }
-      fs.delete(staging, true)
-    }
+    import graft.streaming.StateLog
+    val fs = graft.functions.FsUtils.fs(spark, path)
+    StateLog.healPartitions(spark, path)
+    val staging = StateLog.partitionStaging(path)
     var compacted = 0
-    leafDirs(root).foreach { part =>
+    StateLog.leafDirs(spark, path).foreach { case (rel, part) =>
       val nFiles = fs.listStatus(part)
         .count(f => f.getPath.getName.endsWith(".parquet"))
       if (nFiles > maxFilesPerPartition) {
-        val tmp = new Path(staging, rel(root, part))
         spark.read.parquet(part.toString).coalesce(targetFiles)
-          .write.mode("overwrite").parquet(tmp.toString)
-        FsUtils.replaceDir(fs, tmp, part)
+          .write.mode("overwrite").parquet(s"$staging/$rel")
         compacted += 1
       }
     }
-    fs.delete(staging, true)
-    if (compacted > 0) spark.catalog.refreshByPath(path)
+    if (compacted > 0) StateLog.landPartitions(spark, path)
     compacted
   }
 }

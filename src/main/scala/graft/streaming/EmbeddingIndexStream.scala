@@ -50,6 +50,8 @@ object EmbeddingIndexStream {
     // one code dir; a new dir is stamped here so readers can verify it
     locally {
       val spark = batch.sparkSession
+      (Seq(assignedDir) ++ quantizedDir ++ pqLoaded.map(_._1) ++
+        pqrLoaded.map(_._1)).foreach(healIndex(spark, _))
       val gen = graft.operators.IndexGen.quantizerGen(spark, assignedDir)
       (quantizedDir ++ pqLoaded.map(_._1) ++ pqrLoaded.map(_._1)).foreach(
         graft.operators.IndexGen.requireAppendable(spark, _, gen))
@@ -112,34 +114,23 @@ object EmbeddingIndexStream {
     * probed read goes back to nprobe file-opens regardless of how many
     * batches have streamed in.
     *
-    * Crash safety (single compacting writer — the stream itself):
-    *  - the merge is written to a hidden `.compact-tmp` (invisible to
-    *    partition discovery), then swapped into `batch=-1` and the folded
-    *    source dirs deleted;
-    *  - a crash BEFORE the swap leaves state untouched (stale tmp deleted
-    *    on the next run);
-    *  - a crash INSIDE the swap (dst deleted, tmp not yet renamed) is the
-    *    classic replaceDir orphan: the recovery preamble completes the
-    *    rename next run — a committed `.compact-tmp/_SUCCESS` with no
-    *    `batch=-1` IS the swap's redo log;
-    *  - a crash AFTER the swap but before the source deletes leaves
-    *    duplicates visible until the next compaction; the fold dedups by
-    *    vec_id (duplicate rows are bit-identical by construction), so
-    *    re-compaction converges. Like OverlapStream's compaction, this
-    *    trades a transient post-crash window for a bounded file count.
+    * Crash safety (single compacting writer — the stream itself): the fold
+    * replaces `batch=-1` through [[StateLog.swapDir]], staged in the hidden
+    * `.compact-tmp` (a sibling `batch=-1.tmp` would be discovered as a
+    * partition value), and every index read heals a crash inside that swap
+    * first ([[healIndex]]). The folded source dirs are deleted after the
+    * swap: a crash before those deletes leaves duplicates visible until
+    * the next compaction; the fold dedups by vec_id (duplicate rows are
+    * bit-identical by construction), so re-compaction converges. Like
+    * OverlapStream's compaction, this trades a transient post-crash window
+    * for a bounded file count.
     */
   def compactIndex(spark: SparkSession, indexDir: String,
                    uptoExclusive: Long = Long.MaxValue): Unit = {
     val fs = FsUtils.fs(spark, indexDir)
     val base = new Path(indexDir)
+    healIndex(spark, indexDir)
     if (!fs.exists(base)) return
-    val tmp = new Path(base, ".compact-tmp")
-    val dst = new Path(base, "batch=-1")
-    if (fs.exists(tmp)) {
-      if (!fs.exists(dst) && fs.exists(new Path(tmp, "_SUCCESS")))
-        FsUtils.renameOrThrow(fs, tmp, dst) // finish an interrupted swap
-      else fs.delete(tmp, true) // stale partial merge — refold below
-    }
     val foldable = fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
       .filter { p =>
         p.getName.startsWith("batch=") && {
@@ -156,17 +147,36 @@ object EmbeddingIndexStream {
     // the exclusion must stay armed until clearTombstones' maintenance
     // window. latest-wins per id also heals a crash-window re-fold
     // (bit-identical duplicates share src_batch).
-    Similarity.latestIngest(applyCeilings(
-        spark.read.option("basePath", indexDir)
-          .parquet(foldable.map(_.toString).toIndexedSeq: _*)
-          .drop("batch"),
-        tombstoneCeilings(spark, indexDir)))
-      .repartition(col("cluster")) // one file per cluster dir
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(tmp.toString)
-    FsUtils.replaceDir(fs, tmp, dst)
+    StateLog.swapDir(spark, s"$indexDir/batch=-1", compactTmp(indexDir)) { tmp =>
+      Similarity.latestIngest(applyCeilings(
+          spark.read.option("basePath", indexDir)
+            .parquet(foldable.map(_.toString).toIndexedSeq: _*)
+            .drop("batch"),
+          tombstoneCeilings(spark, indexDir)))
+        .repartition(col("cluster")) // one file per cluster dir
+        .write.mode("overwrite").partitionBy("cluster")
+        .parquet(tmp)
+    }
     foldable.filter(_.getName != "batch=-1").foreach(fs.delete(_, true))
     spark.catalog.refreshByPath(indexDir)
+  }
+
+  private def compactTmp(indexDir: String) = s"$indexDir/.compact-tmp"
+
+  /** Heal a crashed swap of the whole index dir ([[reclusterIndex]],
+    * `ImageAnn.reseedIndex`) and of its compacted `batch=-1`
+    * ([[compactIndex]]) — [[StateLog]]'s reader contract: every index
+    * read and write calls this before it touches the dir. */
+  private[graft] def healIndex(spark: SparkSession, indexDir: String): Unit = {
+    StateLog.healSwaps(spark, indexDir)
+    StateLog.healSwap(spark, s"$indexDir/batch=-1", compactTmp(indexDir))
+  }
+
+  /** The raw index rows, `batch` partition column included, after
+    * [[healIndex]] — the one read every index reader shares. */
+  private[graft] def readRaw(spark: SparkSession, indexDir: String): DataFrame = {
+    healIndex(spark, indexDir)
+    spark.read.parquet(indexDir)
   }
 
   /** @param quantizedDir when set, each batch ALSO lands in an
@@ -222,7 +232,7 @@ object EmbeddingIndexStream {
 
   /** The queryable inverted-list table (drops the bookkeeping batch col). */
   def readIndex(spark: SparkSession, assignedDir: String): DataFrame =
-    spark.read.parquet(assignedDir).drop("batch")
+    readRaw(spark, assignedDir).drop("batch")
 
   // --- deletes (round 16) + in-place updates (round 18) --------------------
   //
@@ -234,8 +244,8 @@ object EmbeddingIndexStream {
   // rows ingested in batches ≤ ceiling":
   //  - [[tombstone]] writes the rows under `.tombstones/batch=<id>` — a
   //    DOT-dir, invisible to the index's own partition discovery, so no
-  //    reader sees tombstone rows as vectors. O(ids) per call, idempotent
-  //    per batchId (deterministic overwrite, the index-batch pattern).
+  //    reader sees tombstone rows as vectors. O(ids) per call, committed
+  //    once per batchId: a re-call for a committed batch id is skipped.
   //    The ceiling defaults to the tombstone's own batch id (a plain
   //    delete); an UPDATE tombstones at ceiling = batch−1 and appends the
   //    new vector in the same batch — the new generation (src_batch =
@@ -375,7 +385,7 @@ object EmbeddingIndexStream {
       .select(col("query_id"), col("qv"), explode(col("clusters")).as("cluster"))
     val probed = withClusters.flatMap(_._3).distinct
     val cands = Similarity.latestIngest(applyCeilings(
-        spark.read.parquet(indexDir)
+        readRaw(spark, indexDir)
           .filter(col("cluster").isin(probed: _*)),
         tombstoneCeilings(spark, indexDir)))
       .select(col("vec_id").as("cand_id"), col("v").as("cv"), col("cluster"))
@@ -427,7 +437,7 @@ object EmbeddingIndexStream {
   def indexAsOf(spark: SparkSession, indexDir: String,
                 asOfBatch: Long): DataFrame =
     Similarity.latestIngest(applyCeilings(
-        spark.read.parquet(indexDir)
+        readRaw(spark, indexDir)
           .filter(col("batch") <= asOfBatch) // partition prune (−1 included)
           // EXACT ingest bound — src_batch survives compaction, so the
           // ingest side of an as-of read no longer coarsens to the folded
@@ -454,7 +464,7 @@ object EmbeddingIndexStream {
       .select(col("query_id"), col("qv"), explode(col("clusters")).as("cluster"))
     val probed = withClusters.flatMap(_._3).distinct
     val cands = Similarity.latestIngest(applyCeilings(
-        spark.read.parquet(indexDir)
+        readRaw(spark, indexDir)
           .filter(col("cluster").isin(probed: _*) && col("batch") <= asOfBatch)
           .filter(col("src_batch") <= asOfBatch), // exact, fold-surviving
         tombstoneCeilingsAsOf(spark, indexDir, asOfBatch)))
@@ -586,6 +596,7 @@ object EmbeddingIndexStream {
     * persisted) quantizer. */
   def indexQuantizer(spark: SparkSession, indexDir: String,
                      initial: => Seq[(Int, Seq[Double])]): Seq[(Int, Seq[Double])] = {
+    healIndex(spark, indexDir)
     val p = quantizerPath(indexDir)
     if (FsUtils.fs(spark, p).exists(new Path(p)))
       Similarity.loadCentroids(spark, p)
@@ -620,13 +631,11 @@ object EmbeddingIndexStream {
     * index dir. Returns the new quantizer (also persisted co-located, see
     * [[indexQuantizer]]).
     *
-    * Crash safety (single maintaining writer, the compactIndex
-    * discipline): the new layout is fully written to a sibling
-    * `<dir>.recluster-tmp` and stamped with a `_RECLUSTER_READY` marker
-    * BEFORE the swap; a crash before the marker leaves the old index
-    * untouched (stale tmp deleted on the next call), a crash inside the
-    * swap (old dir deleted, tmp not renamed) is redone by the recovery
-    * preamble — a marked tmp with no index dir IS the swap's redo log.
+    * Crash safety (single maintaining writer): the new dir replaces the
+    * old one through [[StateLog.swapDir]], and every index read and write
+    * heals a crash inside that swap ([[healIndex]]). When this call's own
+    * entry heal lands an earlier recluster's swap, it returns that swap's
+    * co-located quantizer instead of retraining.
     *
     * Tombstone interaction: the rewrite drops tombstoned ROWS (it reads
     * [[liveIndex]]), but the tombstone set itself is carried into the new
@@ -636,45 +645,32 @@ object EmbeddingIndexStream {
   def reclusterIndex(spark: SparkSession, indexDir: String,
                      initial: => Seq[(Int, Seq[Double])],
                      iters: Int = 2): Seq[(Int, Seq[Double])] = {
-    val fs = FsUtils.fs(spark, indexDir)
-    val base = new Path(indexDir)
-    val tmp = new Path(base.getParent, base.getName + ".recluster-tmp")
-    val ready = new Path(tmp, "_RECLUSTER_READY")
-    if (fs.exists(tmp)) {
-      if (!fs.exists(base) && fs.exists(ready)) {
-        FsUtils.renameOrThrow(fs, tmp, base) // finish an interrupted swap
-        fs.delete(new Path(base, "_RECLUSTER_READY"), false)
-        spark.catalog.refreshByPath(indexDir)
-        return Similarity.loadCentroids(spark, quantizerPath(indexDir))
-      } else fs.delete(tmp, true) // stale partial rewrite — redo below
-    }
+    if (StateLog.healSwaps(spark, indexDir))
+      return Similarity.loadCentroids(spark, quantizerPath(indexDir))
     val live = liveResolved(spark, indexDir).select("vec_id", "v", "src_batch")
     var cents = indexQuantizer(spark, indexDir, initial)
     for (_ <- 1 to iters) cents = recenterStep(live, cents)
-    // re-assign under the new quantizer, PRESERVING each row's ingest
-    // provenance (src_batch) — the carried ceiling tombstones must keep
-    // resolving against it (resetting provenance would let an armed
-    // update-tombstone re-hide the generations that survived it)
-    Similarity.assign(live.select(col("vec_id"), col("v").as("embedding")), cents)
-      .join(live.select("vec_id", "src_batch"), Seq("vec_id"))
-      .repartition(col("cluster")) // one file per cluster dir
-      .write.mode("overwrite").partitionBy("cluster")
-      .parquet(new Path(tmp, "batch=-1").toString)
-    Similarity.saveCentroids(spark, cents, quantizerPath(tmp.toString))
-    // generation bump INSIDE the tmp (the atomic rename carries data +
-    // quantizer + generation together): code tiers stamped with the old
-    // generation become mechanically unreadable against this dir until
-    // rebuilt — the IndexGen fence, replacing the prose-only contract
-    graft.operators.IndexGen.setQuantizerGen(spark, tmp.toString,
-      graft.operators.IndexGen.quantizerGen(spark, indexDir) + 1L)
-    val ts = rawTombstones(spark, indexDir)
-    if (!ts.isEmpty) ts.coalesce(1).write.mode("overwrite")
-      .parquet(s"${tombstonesPath(tmp.toString)}/batch=-1")
-    fs.create(ready, true).close()
-    fs.delete(base, true)
-    FsUtils.renameOrThrow(fs, tmp, base)
-    fs.delete(new Path(base, "_RECLUSTER_READY"), false)
-    spark.catalog.refreshByPath(indexDir)
+    StateLog.swapDir(spark, indexDir) { tmp =>
+      // re-assign under the new quantizer, PRESERVING each row's ingest
+      // provenance (src_batch) — the carried ceiling tombstones must keep
+      // resolving against it (resetting provenance would let an armed
+      // update-tombstone re-hide the generations that survived it)
+      Similarity.assign(live.select(col("vec_id"), col("v").as("embedding")), cents)
+        .join(live.select("vec_id", "src_batch"), Seq("vec_id"))
+        .repartition(col("cluster")) // one file per cluster dir
+        .write.mode("overwrite").partitionBy("cluster")
+        .parquet(s"$tmp/batch=-1")
+      Similarity.saveCentroids(spark, cents, quantizerPath(tmp))
+      // generation bump INSIDE the tmp (the atomic rename carries data +
+      // quantizer + generation together): code tiers stamped with the old
+      // generation become mechanically unreadable against this dir until
+      // rebuilt — the IndexGen fence, replacing the prose-only contract
+      graft.operators.IndexGen.setQuantizerGen(spark, tmp,
+        graft.operators.IndexGen.quantizerGen(spark, indexDir) + 1L)
+      val ts = rawTombstones(spark, indexDir)
+      if (!ts.isEmpty) ts.coalesce(1).write.mode("overwrite")
+        .parquet(s"${tombstonesPath(tmp)}/batch=-1")
+    }
     cents
   }
 

@@ -256,12 +256,8 @@ object EventsPipeline {
     */
   def refreshDailyAgg(spark: SparkSession, rawDir: String, aggDir: String,
                       dates: Seq[java.sql.Date]): Unit = {
-    import org.apache.hadoop.fs.Path
     if (dates.isEmpty) return
-    val fs = graft.functions.FsUtils.fs(spark, aggDir)
-    val aggPath = new Path(aggDir)
-    val tmpPath = new Path(aggDir + ".tmp")
-    recoverOrphans(fs, tmpPath, aggPath, Seq("day="))
+    StateLog.healPartitions(spark, aggDir)
     val slice = spark.read.parquet(rawDir)
       .filter(col("event_date").isin(dates: _*)) // partition-pruned scan
     // group by to_date(ts) — NOT window(): window() buckets are UTC-epoch-
@@ -274,9 +270,9 @@ object EventsPipeline {
     val agg = slice
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), round(sum("value"), 2).as("sum_value"))
-    agg.write.mode("overwrite").partitionBy("day").parquet(tmpPath.toString)
-    swapPartitionDirs(fs, tmpPath, aggPath, Seq("day="))
-    spark.catalog.refreshByPath(aggDir)
+    agg.write.mode("overwrite").partitionBy("day")
+      .parquet(StateLog.partitionStaging(aggDir))
+    StateLog.landPartitions(spark, aggDir)
   }
 
   /** The queryable incrementally-maintained aggregate — partition pruning on
@@ -294,8 +290,9 @@ object EventsPipeline {
     *   2. read the target pruned to those partitions (PartitionFilters — no
     *      other partition's files are opened);
     *   3. Merge.upsert(slice, batch) — last-write-wins per event_id;
-    *   4. write the merged slice to `outDir.tmp` partitioned by event_date,
-    *      then swap ONLY those partition directories via FileSystem rename.
+    *   4. write the merged slice to the partition staging dir, then swap
+    *      ONLY those partition directories into the sink
+    *      (`StateLog.landPartitions`).
     * Untouched partitions are never read, never rewritten (StreamingSpec
     * asserts their files keep their timestamps).
     *
@@ -312,9 +309,9 @@ object EventsPipeline {
     * all-partition anti-join scan per micro-batch — exactly the O(corpus)
     * cost this partition-pruned merge exists to avoid.
     *
-    * Crash safety: the danger window is between per-partition delete and
-    * rename. On entry we restore any partition that exists under `.tmp` but
-    * not under the sink (the orphan a crash leaves), then the at-least-once
+    * Crash safety: the danger window is between a partition's delete and
+    * rename inside the swap. On entry `StateLog.healPartitions` restores the
+    * partition a crash left orphaned in staging, then the at-least-once
     * replay of the batch re-runs the idempotent merge. No catch-all: a
     * transient read failure fails the batch (and is retried by the stream)
     * instead of silently resetting the table — the sink's absence is an
@@ -323,17 +320,12 @@ object EventsPipeline {
   def mergePartitioned(spark: SparkSession, batch: DataFrame, outDir: String,
                        knownDates: Option[Seq[java.sql.Date]] = None,
                        hourShard: Boolean = false): Long = {
-    import org.apache.hadoop.fs.Path
-    val fs = graft.functions.FsUtils.fs(spark, outDir)
-    val outPath = new Path(outDir)
-    val tmpPath = new Path(outDir + ".tmp")
     // `hourShard` = the documented hot-day mitigation, implemented: the
     // sink is laid out event_date=…/event_hour=… and a micro-batch rewrites
     // only its touched HOURS — a day receiving events all day no longer
     // re-merges its whole partition every batch, only ~1/24 of it
     val partCols = if (hourShard) Seq("event_date", "event_hour") else Seq("event_date")
-    val prefixes = partCols.map(_ + "=")
-    recoverOrphans(fs, tmpPath, outPath, prefixes)
+    StateLog.healPartitions(spark, outDir)
 
     val withDate = batch.withColumn("event_date", to_date(col("ts")))
     val withParts =
@@ -355,71 +347,19 @@ object EventsPipeline {
       partCols.zip(t).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _))
       .reduce(_ || _)
     val slice =
-      if (!fs.exists(outPath)) withParts.limit(0)
+      if (!graft.functions.FsUtils.fs(spark, outDir)
+          .exists(new org.apache.hadoop.fs.Path(outDir))) withParts.limit(0)
       else spark.read.parquet(outDir).filter(touchedCond) // partition-pruned scan
     // version = ts: last-write-wins per event_id across batches
     val merged = Merge.upsert(slice, withParts, Seq("event_id"), "ts")
-    merged.write.mode("overwrite").partitionBy(partCols: _*).parquet(tmpPath.toString)
-    val n = spark.read.parquet(tmpPath.toString).count()
-    swapPartitionDirs(fs, tmpPath, outPath, prefixes)
-    // drop the stale file listing for the swapped partitions (the shared
-    // FileStatusCache would otherwise serve deleted part files to the next
-    // batch's pruned read)
-    spark.catalog.refreshByPath(outDir)
+    val staging = StateLog.partitionStaging(outDir)
+    merged.write.mode("overwrite").partitionBy(partCols: _*).parquet(staging)
+    val n = spark.read.parquet(staging).count()
+    // the land's refresh drops the stale file listing for the swapped
+    // partitions (the shared FileStatusCache would otherwise serve deleted
+    // part files to the next batch's pruned read)
+    StateLog.landPartitions(spark, outDir)
     n
-  }
-
-  /** The staged LEAF partition dirs under `root`, one listStatus level per
-    * prefix (e.g. `Seq("event_date=", "event_hour=")` walks
-    * `event_date=…/event_hour=…`), with their paths relative to `root`. */
-  private def leafPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
-                                root: org.apache.hadoop.fs.Path,
-                                prefixes: Seq[String]): Seq[(String, org.apache.hadoop.fs.Path)] = {
-    val leaves = prefixes.foldLeft(Seq(root)) { (dirs, pre) =>
-      dirs.flatMap(d => fs.listStatus(d).toSeq.map(_.getPath)
-        .filter(_.getName.startsWith(pre)))
-    }
-    // URI paths, not toString: listStatus returns scheme-qualified paths
-    // (file:/…) while the root may be bare — a string strip would no-op and
-    // the "relative" path would silently be absolute
-    val base = root.toUri.getPath
-    leaves.map(p => (p.toUri.getPath.stripPrefix(base).stripPrefix("/"), p))
-  }
-
-  /** Restore partitions orphaned by a crash between a swap's delete and
-    * rename (the leaf dir exists under `.tmp` but not under the sink), then
-    * drop the staging dir. Shared by every partition-scoped swap site. */
-  private def recoverOrphans(fs: org.apache.hadoop.fs.FileSystem,
-                             tmpPath: org.apache.hadoop.fs.Path,
-                             outPath: org.apache.hadoop.fs.Path,
-                             prefixes: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (fs.exists(tmpPath)) {
-      leafPartitionDirs(fs, tmpPath, prefixes).foreach { case (rel, src) =>
-        val dst = new Path(outPath, rel)
-        if (!fs.exists(dst)) {
-          fs.mkdirs(dst.getParent)
-          graft.functions.FsUtils.renameOrThrow(fs, src, dst)
-        }
-      }
-      fs.delete(tmpPath, true)
-    }
-  }
-
-  /** Move every staged leaf partition dir into the sink (delete-then-
-    * rename per dir), then drop the staging dir. Untouched partitions are
-    * never listed, read, or moved. */
-  private def swapPartitionDirs(fs: org.apache.hadoop.fs.FileSystem,
-                                tmpPath: org.apache.hadoop.fs.Path,
-                                outPath: org.apache.hadoop.fs.Path,
-                                prefixes: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
-    leafPartitionDirs(fs, tmpPath, prefixes).foreach { case (rel, src) =>
-      val dst = new Path(outPath, rel)
-      fs.mkdirs(dst.getParent)
-      graft.functions.FsUtils.replaceDir(fs, src, dst)
-    }
-    fs.delete(tmpPath, true)
   }
 
   /** Stateful-operator metrics from a (running or stopped) query's recent

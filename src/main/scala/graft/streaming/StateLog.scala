@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.FsUtils
@@ -14,9 +14,13 @@ import graft.functions.FsUtils
   * StateHistoryStream), the batch-dir commits of CurationStream's output,
   * ComponentsStream's star log and the two tombstone logs
   * (EmbeddingIndexStream, LexStatsStream), the grid commits of
-  * HistogramStream and DriftStream, and the whole-dir swaps of
-  * FunnelStream, StateHistoryStream, CurationStream, ComponentsStream and
-  * ReservoirStream (see each stream's scaladoc for its replay argument).
+  * HistogramStream and DriftStream, the whole-dir swaps ([[StateLog.swapDir]])
+  * of FunnelStream, StateHistoryStream, CurationStream, ComponentsStream,
+  * ReservoirStream, EmbeddingIndexStream's compaction and recluster,
+  * ImageAnn's reseed and Layout's z-order recluster, and the partition
+  * swaps ([[StateLog.landPartitions]]) of EventsPipeline's merge and daily
+  * aggregate and Layout's partition compaction (see each site's scaladoc
+  * for its replay argument). No other module renames state into place.
   * One instance manages one append-only log of per-batch state dirs under
   * `stateDir/logName`:
   *
@@ -191,21 +195,16 @@ final class StateLog(
     if (skipAboveWatermark.exists(applied => maxBatch > applied)) return
     // the tmp write below finishes before the swap deletes any source
     val folded = fold(spark.read.parquet(logPath))
-    if (watermark && maxBatch >= 0) {
-      val tmp = new Path(foldmetaPath + ".tmp")
-      f.delete(tmp, true)
-      f.create(new Path(tmp, StateLog.UptoMarker + maxBatch)).close()
-      FsUtils.replaceDir(f, tmp, new Path(foldmetaPath))
+    if (watermark && maxBatch >= 0)
+      StateLog.swapDir(spark, foldmetaPath)(tmp =>
+        f.create(new Path(tmp, StateLog.UptoMarker + maxBatch)).close())
+    StateLog.swapDir(spark, logPath) { tmp =>
+      val w = (if (coalesce1) folded.coalesce(1) else folded)
+        .write.mode("overwrite")
+      (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w)
+        .parquet(s"$tmp/batch=-1")
+      beforeSwap(tmp)
     }
-    val tmp = new Path(logPath + ".tmp")
-    f.delete(tmp, true)
-    val w = (if (coalesce1) folded.coalesce(1) else folded)
-      .write.mode("overwrite")
-    (if (partitionByCols.nonEmpty) w.partitionBy(partitionByCols: _*) else w)
-      .parquet(s"$tmp/batch=-1")
-    beforeSwap(tmp.toString)
-    FsUtils.replaceDir(f, tmp, lp)
-    spark.catalog.refreshByPath(logPath)
   }
 }
 
@@ -215,29 +214,31 @@ object StateLog {
     * id follows it. */
   private val UptoMarker = "_folded_upto="
 
-  /** Complete any interrupted temp-swap at the given paths: `replaceDir`'s
-    * crash window between delete(dst) and rename leaves dst missing and
-    * `dst.tmp` as the sole surviving copy — without this heal a crash
-    * inside a compaction swap would silently zero accumulated state (and an
-    * already-committed watermark would suppress the replays that could
-    * rebuild it). A `dst.tmp` whose write never finished is deleted
-    * instead: landing it would replace missing state with a partial or
-    * empty table. */
-  def healSwaps(spark: SparkSession, paths: String*): Unit =
-    paths.foreach { p =>
-      val f = FsUtils.fs(spark, p)
-      val out = new Path(p)
-      val tmp = new Path(p + ".tmp")
-      if (!f.exists(out) && f.exists(tmp)) {
-        if (finished(f, tmp)) FsUtils.renameOrThrow(f, tmp, out)
-        else f.delete(tmp, true)
-      }
-    }
+  /** Complete any interrupted whole-dir swap ([[swapDir]]) at the given
+    * paths, each through its default `path.tmp`; true when one landed. */
+  def healSwaps(spark: SparkSession, paths: String*): Boolean =
+    paths.map(p => healSwap(spark, p, p + ".tmp")).contains(true)
+
+  /** Complete an interrupted [[swapDir]] of `path` through `tmp`: the crash
+    * window between delete(dst) and rename leaves dst missing and `tmp` as
+    * the sole surviving copy — without this heal a crash inside a swap
+    * would silently zero accumulated state (and an already-committed
+    * watermark would suppress the replays that could rebuild it). A `tmp`
+    * whose write never finished is deleted instead: landing it would
+    * replace missing state with a partial or empty table. True when the
+    * tmp landed. */
+  def healSwap(spark: SparkSession, path: String, tmp: String): Boolean = {
+    val f = FsUtils.fs(spark, path)
+    val (out, t) = (new Path(path), new Path(tmp))
+    if (f.exists(out) || !f.exists(t)) false
+    else if (finished(f, t)) { FsUtils.renameOrThrow(f, t, out); true }
+    else { f.delete(t, true); false }
+  }
 
   /** A temp-swap source holds a finished write: at least one file and no
     * Spark `_temporary` staging dir. A crash before the write's job commit
     * leaves the staging dir; an aborted write leaves the dir empty. */
-  private def finished(f: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean = {
+  private def finished(f: FileSystem, dir: Path): Boolean = {
     val files = f.listFiles(dir, true)
     var any = false
     while (files.hasNext)
@@ -288,24 +289,112 @@ object StateLog {
     readKnown(spark, path, schema).getOrElse(
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
 
-  /** Temp-swap a whole dir into place: write `df` to `path.tmp`, then
-    * delete-and-rename over `path` — the single-rename MV rewrite every
-    * keyed-state stream shares. Crash inside the swap is healed by
-    * [[healSwaps]] on the next access. `subdir` writes the rows one level
-    * down (`batch=<max>`: a compacted log keeps a uniform `batch=` layout
-    * for partition discovery). A stale `path.tmp` left by an earlier swap
-    * that crashed before its delete is cleared first, so a `subdir` write
-    * never lands beside an old one. */
-  def swapWrite(spark: SparkSession, path: String, df: DataFrame,
-                coalesce1: Boolean = true, subdir: Option[String] = None): Unit = {
+  /** Swap a whole dir into place through `path.tmp` ([[swapDir]] with
+    * the default tmp). */
+  def swapDir(spark: SparkSession, path: String)(write: String => Unit): Unit =
+    swapDir(spark, path, path + ".tmp")(write)
+
+  /** The one whole-dir swap: heal an interrupted earlier swap ([[healSwap]]
+    * — a tmp that is the sole copy lands, never dropped), clear a stale
+    * `tmp` left by a swap that crashed before its delete, run `write(tmp)`,
+    * then delete `path` and rename `tmp` over it. `path` is deleted only
+    * after `write` returns, so a crash before that point leaves `path`
+    * intact and its stale tmp is cleared on the next call; a crash inside
+    * delete-and-rename leaves `path` missing and a finished `tmp`, which
+    * the next reader's heal lands. `write` may read `path`: it is still
+    * whole while `write` runs. */
+  def swapDir(spark: SparkSession, path: String, tmp: String)(
+      write: String => Unit): Unit = {
     val f = FsUtils.fs(spark, path)
-    val tmp = new Path(path + ".tmp")
-    healSwaps(spark, path) // a tmp that is the sole copy lands, never dropped
-    f.delete(tmp, true)
-    (if (coalesce1) df.coalesce(1) else df)
-      .write.mode("overwrite").parquet(subdir.fold(tmp.toString)(d => s"$tmp/$d"))
-    FsUtils.replaceDir(f, tmp, new Path(path))
+    healSwap(spark, path, tmp)
+    f.delete(new Path(tmp), true)
+    write(tmp)
+    replaceDir(f, new Path(tmp), new Path(path))
     spark.catalog.refreshByPath(path)
+  }
+
+  /** Temp-swap `df` into place at `path` ([[swapDir]]) — the single-rename
+    * MV rewrite every keyed-state stream shares. `subdir` writes the rows
+    * one level down (`batch=<max>`: a compacted log keeps a uniform
+    * `batch=` layout for partition discovery). */
+  def swapWrite(spark: SparkSession, path: String, df: DataFrame,
+                coalesce1: Boolean = true, subdir: Option[String] = None): Unit =
+    swapDir(spark, path) { tmp =>
+      (if (coalesce1) df.coalesce(1) else df)
+        .write.mode("overwrite").parquet(subdir.fold(tmp)(d => s"$tmp/$d"))
+    }
+
+  /** The delete-then-rename step of every swap; its crash window is what
+    * [[healSwap]] and [[healPartitions]] close. */
+  private def replaceDir(f: FileSystem, src: Path, dst: Path): Unit = {
+    f.delete(dst, true)
+    FsUtils.renameOrThrow(f, src, dst)
+  }
+
+  // --- partition swaps: rewrite some leaf partitions of a table in place ---
+
+  /** Staging root of a partition swap on `root`. Its name differs from the
+    * whole-dir `root.tmp`, so a [[swapDir]]'s stale-tmp delete can never
+    * drop a partition orphan. Outside the table root: a staged leaf inside
+    * it would be discovered as an extra partition value. */
+  def partitionStaging(root: String): String = s"$root.parts-tmp"
+
+  /** Leaf partition dirs (`=`-named, at any depth — `partitionBy("d", "t")`
+    * puts the files two levels down) under `root`, each with its path
+    * relative to `root`. Empty for a missing root. */
+  def leafDirs(spark: SparkSession, root: String): Seq[(String, Path)] = {
+    val f = FsUtils.fs(spark, root)
+    val base = new Path(root)
+    def walk(dir: Path): Seq[Path] =
+      f.listStatus(dir).toSeq
+        .filter(st => st.isDirectory && st.getPath.getName.contains("="))
+        .flatMap { st =>
+          val deeper = walk(st.getPath)
+          if (deeper.isEmpty) Seq(st.getPath) else deeper
+        }
+    if (!f.exists(base)) return Nil
+    // URI paths of qualified paths on both sides: listStatus returns
+    // scheme-qualified paths (file:/…) while `root` may be bare, and a
+    // failed strip would leave an ABSOLUTE "relative" path that resolves
+    // to the partition itself
+    val b = f.makeQualified(base).toUri.getPath
+    walk(base).map { p =>
+      val c = f.makeQualified(p).toUri.getPath
+      require(c.startsWith(b + "/"), s"$p not under $root")
+      (c.stripPrefix(b + "/"), p)
+    }
+  }
+
+  /** Restore leaf partitions orphaned by a crash inside [[landPartitions]]
+    * (the leaf exists under the staging root but not under `root`), then
+    * drop the staging root. Call before reading `root`. */
+  def healPartitions(spark: SparkSession, root: String): Unit = {
+    val f = FsUtils.fs(spark, root)
+    val staging = partitionStaging(root)
+    leafDirs(spark, staging).foreach { case (rel, src) =>
+      val dst = new Path(new Path(root), rel)
+      if (!f.exists(dst)) {
+        f.mkdirs(dst.getParent)
+        FsUtils.renameOrThrow(f, src, dst)
+      }
+    }
+    f.delete(new Path(staging), true)
+  }
+
+  /** Land every leaf partition written under [[partitionStaging]] over its
+    * twin in `root` (delete-and-rename per leaf), drop the staging root and
+    * refresh `root`. Partitions not staged are never listed, read or
+    * moved. */
+  def landPartitions(spark: SparkSession, root: String): Unit = {
+    val f = FsUtils.fs(spark, root)
+    val staging = partitionStaging(root)
+    leafDirs(spark, staging).foreach { case (rel, src) =>
+      val dst = new Path(new Path(root), rel)
+      f.mkdirs(dst.getParent)
+      replaceDir(f, src, dst)
+    }
+    f.delete(new Path(staging), true)
+    spark.catalog.refreshByPath(root)
   }
 
   /** Unpersist a localCheckpoint'ed frame's backing RDD (the per-batch

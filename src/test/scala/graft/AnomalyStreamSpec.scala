@@ -12,7 +12,7 @@ class AnomalyStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-anomaly-stream").toString
+    tempDir("graft-anomaly-stream")
 
   private def eventsOn(dayCounts: Seq[(String, Int)]): DataFrame =
     dayCounts.flatMap { case (d, n) =>

@@ -13,7 +13,7 @@ class BpeStreamSpec extends AnyFunSuite with SparkSuite {
   private val M = 24
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-bpe-stream").toString
+    tempDir("graft-bpe-stream")
 
   private def docs = Tables.documents(spark, Sf0001)
 

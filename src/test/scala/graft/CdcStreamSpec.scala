@@ -10,7 +10,7 @@ class CdcStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-cdc-stream").toString
+    tempDir("graft-cdc-stream")
 
   private def docs = Tables.documents(spark, Sf0001).select("doc_id", "text")
 

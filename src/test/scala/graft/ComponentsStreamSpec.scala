@@ -34,7 +34,7 @@ class ComponentsStreamSpec extends AnyFunSuite with SparkSuite {
       .as[(Long, Long)].collect().toMap
 
   private def tmpDir(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-ccs-$tag").toString
+    tempDir(s"graft-ccs-$tag")
 
   // the jobs of one warm fold as measured, plus one of slack: a fold that
   // grows by more than one job (an eager checkpoint, count or schema

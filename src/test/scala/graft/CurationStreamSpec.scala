@@ -22,7 +22,7 @@ class CurationStreamSpec extends AnyFunSuite with SparkSuite {
       .as[(Long, String, Double, Long, Long, Long)].collect().toSet
 
   test("id-ordered incremental batches reproduce the batch pipeline exactly") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cstream").toString
+    val tmp = tempDir("graft-cstream")
     val docs = Tables.documents(spark, Sf0001)
     val batchResult = rows(Curation.curate(spark, Sf0001, hashFn = h60))
 
@@ -40,7 +40,7 @@ class CurationStreamSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("re-delivered batch is a no-op (exactly-once via state)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cstream2").toString
+    val tmp = tempDir("graft-cstream2")
     val docs = Tables.documents(spark, Sf0001)
     val b1 = docs.filter(col("doc_id") < 200)
     val first = rows(CurationStream.curateBatch(spark, b1, s"$tmp/state",
@@ -52,7 +52,7 @@ class CurationStreamSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("auto-compaction triggers on the file threshold and moves nothing") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cstream-auto").toString
+    val tmp = tempDir("graft-cstream-auto")
     val docs = Tables.documents(spark, Sf0001)
     val batchResult = rows(Curation.curate(spark, Sf0001, hashFn = h60))
     val fs = graft.functions.FsUtils.fs(spark, tmp)
@@ -86,7 +86,7 @@ class CurationStreamSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("out-of-order arrival may over-keep but never drops a batch-kept doc") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cstream4").toString
+    val tmp = tempDir("graft-cstream4")
     val docs = Tables.documents(spark, Sf0001)
     val batchResult = rows(Curation.curate(spark, Sf0001, hashFn = h60))
     // reversed batch order: high ids first
@@ -103,7 +103,7 @@ class CurationStreamSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("file-source streaming wrapper accumulates the batch-equivalent output") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cstream3").toString
+    val tmp = tempDir("graft-cstream3")
     val docs = Tables.documents(spark, Sf0001)
     val batchResult = rows(Curation.curate(spark, Sf0001, hashFn = h60))
     docs.filter(col("doc_id") < 250).coalesce(1)
@@ -122,7 +122,7 @@ class CurationStreamSpec extends AnyFunSuite with SparkSuite {
   // --- hand-built corpora: the batch pipeline reads its corpus from a dir -
 
   private def tmpDir(tag: String) =
-    java.nio.file.Files.createTempDirectory(s"graft-cstream-$tag").toString
+    tempDir(s"graft-cstream-$tag")
 
   private val base = Tables.documents(spark, Sf0001).filter(col("doc_id") < 300)
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.streaming.DecontamStream
@@ -9,7 +8,7 @@ import graft.operators.Prep
 class DecontamStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("decontam").toString
+  private def tmp(): String = tempDir("decontam")
   private def docs = Tables.documents(spark, Sf0001)
 
   private def flags(out: String): Set[(Long, Boolean, Long)] =

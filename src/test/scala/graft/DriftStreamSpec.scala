@@ -11,7 +11,7 @@ class DriftStreamSpec extends AnyFunSuite with SparkSuite {
   private val K = 16
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-drift-stream").toString
+    tempDir("graft-drift-stream")
 
   private def docs = Tables.documents(spark, Sf0001)
 

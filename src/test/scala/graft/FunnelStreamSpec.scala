@@ -13,7 +13,7 @@ class FunnelStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-funnel-stream").toString
+    tempDir("graft-funnel-stream")
 
   private def events = Tables.events(spark, Sf0001)
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Fuzzy, TextAnalysis}
@@ -15,7 +14,7 @@ class FuzzySpec extends AnyFunSuite with SparkSuite {
   private def docs = Tables.documents(spark, Sf0001)
 
   private lazy val state: String = {
-    val s = Files.createTempDirectory("fuzzy").toString
+    val s = tempDir("fuzzy")
     LexStatsStream.applyBatch(spark, docs, 0L, s)
     s
   }

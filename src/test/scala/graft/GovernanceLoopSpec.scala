@@ -44,8 +44,7 @@ class GovernanceLoopSpec extends AnyFunSuite with SparkSuite {
       Set("o_orderkey", "o_custkey", "o_totalprice")))
     assert(a.expectedHitFraction > 0.0 && a.expectedHitFraction < 1.0)
 
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-govloop-z").toString + "/orders-z"
+    val out = tempDir("graft-govloop-z") + "/orders-z"
     Layout.writeZOrdered(
       orders.withColumn(a.colB, col(a.colB).cast("long")),
       a.colA, a.colB, out, nFiles, a.bits)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.HashedModel
@@ -9,7 +8,7 @@ import graft.streaming.HashedModelStream
 class HashedModelStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("hmstream").toString
+  private def tmp(): String = tempDir("hmstream")
   private def docs = Tables.documents(spark, Sf0001).filter($"doc_id" < 300)
   private val xx = (c: org.apache.spark.sql.Column) => xxhash64(c)
 
@@ -45,7 +44,7 @@ class HashedModelStreamSpec extends AnyFunSuite with SparkSuite {
   test("state dirs with spaces work (FsUtils parses paths leniently, not via java.net.URI)") {
     // regression pin for the shared-helper fix: a strict URI parse threw
     // URISyntaxException on entry for any state path containing a space
-    val state = Files.createTempDirectory("hm stream spaced").toString
+    val state = tempDir("hm stream spaced")
     assert(state.contains(" "))
     foldAll(state)
     assert(streamAnswer(state) == batchAnswer)

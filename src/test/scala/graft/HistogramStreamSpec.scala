@@ -13,7 +13,7 @@ class HistogramStreamSpec extends AnyFunSuite with SparkSuite {
   private val K = 16
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-hist-stream").toString
+    tempDir("graft-hist-stream")
 
   private def docs = Tables.documents(spark, Sf0001)
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.ImageAnn
 
@@ -13,7 +12,7 @@ import graft.operators.ImageAnn
   */
 class ImageAnnSpec extends AnyFunSuite with SparkSuite {
 
-  private def tmp(): String = Files.createTempDirectory("imgann").toString
+  private def tmp(): String = tempDir("imgann")
 
   private lazy val docs = Tables.documentsById(spark, Sf0001)
   private lazy val cents = ImageAnn.centroidsOf(docs)
@@ -258,5 +257,20 @@ class ImageAnnSpec extends AnyFunSuite with SparkSuite {
     assert(out == bruteLive(liveQueries, newCents, 3))
     val deletedIds = feats.map(_._1).filter(_ % RM == RR).toSet
     assert(!out.exists(r => deletedIds.contains(r._2)))
+  }
+
+  test("a reseed that crashed inside its swap heals on the next live read") {
+    val p = buildLive()
+    val newCents = liveFeats.sortBy(_._1).take(16).zipWithIndex
+      .map { case ((_, v), i) => (i, v) }
+    ImageAnn.reseedIndex(spark, p, newCents)
+    // the crash window: old dir deleted, the finished rewrite not renamed
+    val fs = graft.functions.FsUtils.fs(spark, p)
+    graft.functions.FsUtils.renameOrThrow(fs,
+      new org.apache.hadoop.fs.Path(p), new org.apache.hadoop.fs.Path(s"$p.tmp"))
+    val out = ImageAnn.topKLive(spark, p, newCents, liveQueries, k = 3, nprobe = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(out == bruteLive(liveQueries, newCents, 3))
+    assert(ImageAnn.indexQuantizer(spark, p, sys.error("must load")) == newCents)
   }
 }

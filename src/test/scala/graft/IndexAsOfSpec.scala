@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
@@ -19,7 +18,7 @@ class IndexAsOfSpec extends AnyFunSuite with SparkSuite {
 
   private def embs = Tables.embeddings(spark, Sf0001)
   private lazy val cents = Similarity.centroidSeq(embs)
-  private def tmp(): String = Files.createTempDirectory("graft-asof").toString
+  private def tmp(): String = tempDir("graft-asof")
 
   private lazy val allIds = embs.select("vec_id").as[Long].collect().toSet
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
@@ -18,7 +17,7 @@ class IndexDeleteSpec extends AnyFunSuite with SparkSuite {
 
   private def embs = Tables.embeddings(spark, Sf0001)
   private lazy val cents = Similarity.centroidSeq(embs)
-  private def tmp(): String = Files.createTempDirectory("graft-del").toString
+  private def tmp(): String = tempDir("graft-del")
 
   private def streamIn(idx: String, nBatches: Int = 3): Unit =
     (0 until nBatches).foreach { b =>
@@ -104,7 +103,7 @@ class IndexDeleteSpec extends AnyFunSuite with SparkSuite {
 
   test("quantized tier: tombstones propagate to the residual-PQ dir (refill, purge, armed replay)") {
     import graft.operators.Pq
-    val base = Files.createTempDirectory("graft-del-pqr").toString
+    val base = tempDir("graft-del-pqr")
     val exDir = s"$base/exact"; val pqrDir = s"$base/pqr"
     val (anchors, rcb) = Pq.trainedResidualModel(embs, cents, "del-spec-res")
     (0 until 3).foreach { b =>
@@ -197,7 +196,7 @@ class IndexDeleteSpec extends AnyFunSuite with SparkSuite {
 
   test("in-place update through the residual tier: pool AND exact rerank serve the new generation") {
     import graft.operators.Pq
-    val base = Files.createTempDirectory("graft-upd-pqr").toString
+    val base = tempDir("graft-upd-pqr")
     val exDir = s"$base/exact"; val pqrDir = s"$base/pqr"
     val (anchors, rcb) = Pq.trainedResidualModel(embs, cents, "upd-spec-res")
     EmbeddingIndexStream.applyBatch(embs, 0L, cents, exDir,

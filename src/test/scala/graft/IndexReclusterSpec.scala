@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
@@ -21,7 +20,7 @@ class IndexReclusterSpec extends AnyFunSuite with SparkSuite {
   private def embs = Tables.embeddings(spark, Sf0001)
   private lazy val cents0 = Similarity.centroidSeq(embs)
   private def tmp(): String =
-    Files.createTempDirectory("graft-recl").toString + "/index"
+    tempDir("graft-recl") + "/index"
 
   private lazy val probes = embs.filter(col("vec_id") < 3)
     .select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -110,7 +109,7 @@ class IndexReclusterSpec extends AnyFunSuite with SparkSuite {
 
   test("generation fence: recluster without a code-tier rebuild fails fast, rebuild heals") {
     import graft.operators.{IndexGen, Pq}
-    val base = Files.createTempDirectory("graft-genfence").toString
+    val base = tempDir("graft-genfence")
     val exDir = s"$base/exact"; val pqrDir = s"$base/pqr"
     val cb = Pq.trainCodebooks(embs, iters = 1, sampleN = 512)
     val anchors = Pq.clusterAnchors(embs, cents0)
@@ -158,7 +157,7 @@ class IndexReclusterSpec extends AnyFunSuite with SparkSuite {
 
   test("generation fence covers the int8 tier: rerank refuses, append refuses, rebuild heals") {
     import graft.operators.{IndexGen, Similarity => Sim}
-    val base = Files.createTempDirectory("graft-genfence-q").toString
+    val base = tempDir("graft-genfence-q")
     val exDir = s"$base/exact"; val qDir = s"$base/int8"
     EmbeddingIndexStream.applyBatch(embs, 0L, cents0, exDir,
       quantizedDir = Some(qDir))
@@ -193,21 +192,42 @@ class IndexReclusterSpec extends AnyFunSuite with SparkSuite {
     EmbeddingIndexStream.applyBatch(embs, 0L, cents0, idx)
     val newCents = EmbeddingIndexStream.reclusterIndex(spark, idx, cents0)
     val before = liveIds(idx)
-    // simulate the crash window: old dir deleted, marked tmp not renamed
+    // simulate the crash window: old dir deleted, finished tmp not renamed
     val fs = graft.functions.FsUtils.fs(spark, idx)
     val base = new org.apache.hadoop.fs.Path(idx)
-    val t = new org.apache.hadoop.fs.Path(base.getParent, base.getName + ".recluster-tmp")
+    val t = new org.apache.hadoop.fs.Path(base.getParent, base.getName + ".tmp")
     graft.functions.FsUtils.renameOrThrow(fs, base, t)
-    fs.create(new org.apache.hadoop.fs.Path(t, "_RECLUSTER_READY"), true).close()
-    // the next maintenance call's recovery preamble redoes the rename and
+    // the next maintenance call's entry heal redoes the rename and
     // returns the co-located quantizer — no retraining, no data loss
     val recovered = EmbeddingIndexStream.reclusterIndex(spark, idx, cents0)
     assert(recovered == newCents)
     assert(liveIds(idx) == before)
-    // and a stale UNMARKED tmp is discarded, not resurrected
+    // and a stale unfinished tmp is discarded, not resurrected
     fs.mkdirs(new org.apache.hadoop.fs.Path(t, "batch=-1"))
     val again = EmbeddingIndexStream.reclusterIndex(spark, idx, cents0)
     assert(liveIds(idx) == before)
     assert(again.map(_._1) == cents0.map(_._1))
+  }
+
+  test("crash inside a recluster swap, then a restarted applyBatch, then a " +
+       "recluster: no reclustered id is lost") {
+    val idx = tmp()
+    val even = embs.filter(col("vec_id") % 2 === 0)
+    val odd = embs.filter(col("vec_id") % 2 === 1)
+    EmbeddingIndexStream.applyBatch(even, 0L, cents0, idx)
+    EmbeddingIndexStream.reclusterIndex(spark, idx, cents0)
+    val reclustered = liveIds(idx)
+    // the crash window: old dir deleted, the finished rewrite not renamed
+    val fs = graft.functions.FsUtils.fs(spark, idx)
+    graft.functions.FsUtils.renameOrThrow(fs,
+      new org.apache.hadoop.fs.Path(idx), new org.apache.hadoop.fs.Path(s"$idx.tmp"))
+    // restart: load the serving quantizer, deliver the next batch, recluster
+    val cents = EmbeddingIndexStream.indexQuantizer(spark, idx, cents0)
+    EmbeddingIndexStream.applyBatch(odd, 1L, cents, idx)
+    EmbeddingIndexStream.reclusterIndex(spark, idx, cents0)
+    val after = liveIds(idx)
+    assert(reclustered.subsetOf(after),
+      s"${(reclustered -- after).size} reclustered ids lost")
+    assert(after.size == embs.count())
   }
 }

@@ -8,7 +8,7 @@ class LayoutSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   test("partitioned layout prunes non-matching tenant directories") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-layout").toString
+    val tmp = tempDir("graft-layout")
     val orders = Tables.orders(spark, Sf0001)
     Layout.writePartitioned(orders, s"$tmp/orders", Seq("o_orderpriority"))
     val pruned = Layout.readPartitioned(spark, s"$tmp/orders")
@@ -113,7 +113,7 @@ class LayoutSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("compaction rewrites only fragmented partitions and keeps rows identical") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val tmp = tempDir("graft-compact")
     val dir = s"$tmp/t"
     // p=a fragmented (12 files), p=b already compact (1 file)
     (1 to 100).map(i => (i.toLong, "a")).toDF("id", "p")
@@ -136,16 +136,16 @@ class LayoutSpec extends AnyFunSuite with SparkSuite {
     // never sees half-compacted data)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir.compact.tmp"))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir.parts-tmp"))
     fs.rename(new org.apache.hadoop.fs.Path(s"$dir/p=a"),
-      new org.apache.hadoop.fs.Path(s"$dir.compact.tmp/p=a"))
+      new org.apache.hadoop.fs.Path(s"$dir.parts-tmp/p=a"))
     Layout.compactPartitions(spark, dir, maxFilesPerPartition = 8)
     val healed = spark.read.parquet(dir).as[(Long, String)].collect().sorted.toSeq
     assert(healed == before)
   }
 
   test("compaction reaches leaf partitions of multi-level tables") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-compact2").toString
+    val tmp = tempDir("graft-compact2")
     val dir = s"$tmp/t"
     (1 to 80).map(i => (i.toLong, "d1", if (i % 2 == 0) "x" else "y"))
       .toDF("id", "d", "t").repartition(10)
@@ -190,8 +190,8 @@ class LayoutSpec extends AnyFunSuite with SparkSuite {
       .select(col("o_orderkey"), col("o_custkey"),
         (col("o_totalprice") * 100).cast("long").as("price_c"))
     val nFiles = 16
-    val zDir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    val linDir = java.nio.file.Files.createTempDirectory("graft-linear").toString
+    val zDir = tempDir("graft-zorder")
+    val linDir = tempDir("graft-linear")
     Layout.writeZOrdered(orders, "o_custkey", "price_c", zDir, nFiles)
     // linear baseline: same file count, sorted by custkey only
     orders.repartitionByRange(nFiles, col("o_custkey"))
@@ -298,7 +298,7 @@ class LayoutSpec extends AnyFunSuite with SparkSuite {
     // must clamp into edge buckets, reads must stay exact regardless
     val b2 = orders.filter(col("o_orderkey") % 3 === 0 && col("o_orderkey") % 2 =!= 0)
       .withColumn("o_custkey", col("o_custkey") + 100000L)
-    val dir = java.nio.file.Files.createTempDirectory("graft-zmaint").toString + "/t"
+    val dir = tempDir("graft-zmaint") + "/t"
     Layout.writeZOrdered(base, "o_custkey", "price_c", dir, nFiles = 8)
     val meta = Layout.readZMeta(spark, dir).get
     assert(meta.colA == "o_custkey" && meta.nFiles == 8)
@@ -326,6 +326,30 @@ class LayoutSpec extends AnyFunSuite with SparkSuite {
     val nF = new java.io.File(dir).listFiles()
       .count(_.getName.endsWith(".parquet"))
     assert(nF <= 8, s"recluster left $nF files")
+  }
+
+  test("z-order recluster crash inside its swap: the next meta read, append " +
+       "and recluster see the full table") {
+    val orders = Tables.orders(spark, Sf0001)
+      .select(col("o_orderkey"), col("o_custkey"),
+        (col("o_totalprice") * 100).cast("long").as("price_c"))
+    val base = orders.filter(col("o_orderkey") % 3 =!= 0)
+    val b1 = orders.filter(col("o_orderkey") % 3 === 0 && col("o_orderkey") % 2 === 0)
+    val b2 = orders.filter(col("o_orderkey") % 3 === 0 && col("o_orderkey") % 2 =!= 0)
+    val dir = tempDir("graft-zcrash") + "/t"
+    Layout.writeZOrdered(base, "o_custkey", "price_c", dir, nFiles = 8)
+    Layout.appendZOrdered(b1, dir, nAppendFiles = 2)
+    Layout.reclusterZOrdered(spark, dir)
+    // the crash window: old table deleted, the finished rewrite not renamed
+    val fs = graft.functions.FsUtils.fs(spark, dir)
+    graft.functions.FsUtils.renameOrThrow(fs,
+      new org.apache.hadoop.fs.Path(dir), new org.apache.hadoop.fs.Path(s"$dir.tmp"))
+    assert(Layout.readZMeta(spark, dir).exists(_.nFiles == 8))
+    Layout.appendZOrdered(b2, dir, nAppendFiles = 2)
+    Layout.reclusterZOrdered(spark, dir)
+    val expectAll = base.unionByName(b1).unionByName(b2)
+      .orderBy("o_orderkey").collect().toSeq
+    assert(spark.read.parquet(dir).orderBy("o_orderkey").collect().toSeq == expectAll)
   }
 
   // rebuild a DataFrame from collected rows (schema of the maintenance test)
@@ -380,7 +404,7 @@ class LayoutSpec extends AnyFunSuite with SparkSuite {
     // most row groups, where the same predicate over an UNCLUSTERED copy
     // of the same data at the same file count skips (nearly) none
     val total = base.count()
-    val unclustered = java.nio.file.Files.createTempDirectory("graft-nozorder").toString
+    val unclustered = tempDir("graft-nozorder")
     base.repartition(64).write.mode("overwrite").parquet(unclustered)
     val pred = (d: org.apache.spark.sql.DataFrame) =>
       d.filter(col("price_c").between(pLo + (pHi - pLo) * 45 / 100,

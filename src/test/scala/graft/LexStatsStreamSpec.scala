@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
@@ -14,7 +13,7 @@ import graft.streaming.LexStatsStream
 class LexStatsStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("lexstats").toString
+  private def tmp(): String = tempDir("lexstats")
   private def docs = Tables.documents(spark, Sf0001)
 
   private def statsRows(df: org.apache.spark.sql.DataFrame) =

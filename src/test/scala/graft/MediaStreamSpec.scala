@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
@@ -14,7 +13,7 @@ import graft.streaming.MediaStream
 class MediaStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("mediastream").toString
+  private def tmp(): String = tempDir("mediastream")
   private def docs = Tables.documents(spark, Sf0001)
 
   private def wavMetaRows(df: org.apache.spark.sql.DataFrame) =

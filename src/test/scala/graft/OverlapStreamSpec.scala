@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -10,7 +9,7 @@ import graft.streaming.OverlapStream
 class OverlapStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("overlap").toString
+  private def tmp(): String = tempDir("overlap")
   private def docs = Tables.documents(spark, Sf0001)
   private val P = 64 // cheaper than the gate's 128; equality is exact anyway
 

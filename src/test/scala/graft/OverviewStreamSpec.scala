@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -15,7 +14,7 @@ class OverviewStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    Files.createTempDirectory("overview_mv").toString
+    tempDir("overview_mv")
 
   private def orders = Tables.orders(spark, Sf0001)
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
@@ -15,7 +14,7 @@ import graft.streaming.{LexStatsStream, PassageLex}
 class PassageLexSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("passagelex").toString
+  private def tmp(): String = tempDir("passagelex")
   private def docs = Tables.documents(spark, Sf0001).select("doc_id", "text")
 
   private def served(state: String) =

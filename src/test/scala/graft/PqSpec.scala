@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{Pq, Similarity}
@@ -11,7 +10,7 @@ class PqSpec extends AnyFunSuite with SparkSuite {
   private def embs = Tables.embeddings(spark, Sf0001)
   private lazy val cents = Similarity.trainedCentroids(embs, Sf0001)
   private lazy val cb = Pq.trainedCodebooks(embs, "pqspec")
-  private def tmp(): String = Files.createTempDirectory("pq").toString
+  private def tmp(): String = tempDir("pq")
 
   private lazy val probeIds = Seq(0L, 1L, 2L, 3L, 4L)
   private lazy val probes = embs.filter(col("vec_id").isin(probeIds: _*))

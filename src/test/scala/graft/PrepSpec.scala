@@ -202,7 +202,7 @@ class PrepSpec extends AnyFunSuite with SparkSuite {
     val text = (Seq.fill(40)("w") ++ Seq("dup", "vector", "query")).mkString(" ")
     val chunks = Prep.chunkTextsOf(Seq((7L, text)).toDF("doc_id", "text"))
       .select(($"doc_id" * 1000 + $"chunk_idx").as("doc_id"), $"text")
-    val state = java.nio.file.Files.createTempDirectory("passage").toString
+    val state = tempDir("passage")
     graft.streaming.LexStatsStream.applyBatch(spark, chunks, 0L, state)
     val out = graft.streaming.LexStatsStream.bm25TopkIndexed(spark, state, k = 5)
       .as[(Long, Double)].collect().toSeq

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import graft.operators.{Prep, Sampling}
@@ -14,7 +13,7 @@ import graft.operators.{Prep, Sampling}
 class PrepStreamSpec extends AnyFunSuite with SparkSuite {
 
   private def streamed(transform: DataFrame => DataFrame, name: String): DataFrame = {
-    val in = Files.createTempDirectory("prep_stream_in").toString
+    val in = tempDir("prep_stream_in")
     val docs = Tables.documents(spark, Sf0001)
     docs.write.parquet(s"$in/drop0")
     val q = transform(

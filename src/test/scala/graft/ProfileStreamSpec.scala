@@ -15,7 +15,7 @@ class ProfileStreamSpec extends AnyFunSuite with SparkSuite {
   private val K = 64 // doc_id/n_chars overflow at sf0.001 — the θ path fires
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-profile-stream").toString
+    tempDir("graft-profile-stream")
 
   private def docs = Tables.documents(spark, Sf0001)
 

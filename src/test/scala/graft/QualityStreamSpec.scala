@@ -11,7 +11,7 @@ class QualityStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-quality-stream").toString
+    tempDir("graft-quality-stream")
 
   private def docs = Tables.documents(spark, Sf0001)
 

@@ -34,7 +34,7 @@ class ReservoirStreamSpec extends AnyFunSuite with SparkSuite {
       Seq(pmod(col("doc_id"), lit(3)) === 2, pmod(col("doc_id"), lit(3)) === 0,
         pmod(col("doc_id"), lit(3)) === 1))
     for ((conds, si) <- splits.zipWithIndex) {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-res$si").toString
+      val tmp = tempDir(s"graft-res$si")
       conds.zipWithIndex.foreach { case (c, i) =>
         ReservoirStream.applyBatch(spark, docs.filter(c), i.toLong, tmp, N)
       }
@@ -45,7 +45,7 @@ class ReservoirStreamSpec extends AnyFunSuite with SparkSuite {
   test("replay, cross-batch redelivery, and compaction never move the sample") {
     val docs = Tables.documents(spark, Sf0001)
     val expected = batchTwin()
-    val tmp = java.nio.file.Files.createTempDirectory("graft-res-replay").toString
+    val tmp = tempDir("graft-res-replay")
     ReservoirStream.applyBatch(spark, docs.filter(col("doc_id") < 250), 0L, tmp, N)
     ReservoirStream.applyBatch(spark, docs.filter(col("doc_id") >= 250), 1L, tmp, N)
     assert(sample(tmp) == expected)
@@ -68,7 +68,7 @@ class ReservoirStreamSpec extends AnyFunSuite with SparkSuite {
 
   test("a mid-compaction crash (tmp written, dir deleted) heals on read") {
     val docs = Tables.documents(spark, Sf0001)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-res-crash").toString
+    val tmp = tempDir("graft-res-crash")
     ReservoirStream.applyBatch(spark, docs, 0L, tmp, N)
     val expected = sample(tmp)
     // simulate the crash window of compactState: state moved to .tmp, the
@@ -83,8 +83,8 @@ class ReservoirStreamSpec extends AnyFunSuite with SparkSuite {
   test("a compaction after one that crashed before its swap folds only the live log") {
     val docs = Tables.documents(spark, Sf0001)
     val part = (i: Int) => docs.filter(pmod(col("doc_id"), lit(4)) === i)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-res-stale").toString
-    val side = java.nio.file.Files.createTempDirectory("graft-res-side").toString
+    val tmp = tempDir("graft-res-stale")
+    val side = tempDir("graft-res-side")
     (0 to 1).foreach { i =>
       ReservoirStream.applyBatch(spark, part(i), i.toLong, tmp, N)
       ReservoirStream.applyBatch(spark, part(i), i.toLong, side, N)
@@ -106,7 +106,7 @@ class ReservoirStreamSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("file-source streaming wrapper folds to the exact batch sample") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-res-stream").toString
+    val tmp = tempDir("graft-res-stream")
     val docs = Tables.documents(spark, Sf0001)
     docs.filter(col("doc_id") < 250).coalesce(1).write.parquet(s"$tmp/in/b1")
     val q = ReservoirStream.runFileStream(spark, s"$tmp/in/*", s"$tmp/state",
@@ -134,7 +134,7 @@ class ReservoirStreamSpec extends AnyFunSuite with SparkSuite {
       .limit(1).select("doc_id").as[Long].head()
     val dup = half.filter(col("doc_id") === topId)
     val poisoned = (1 to N).foldLeft(half)((acc, _) => acc.union(dup))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-res-dup").toString
+    val tmp = tempDir("graft-res-dup")
     ReservoirStream.applyBatch(spark, poisoned, 0L, tmp, N)
     ReservoirStream.applyBatch(spark, docs.filter(col("doc_id") >= 250), 1L, tmp, N)
     assert(sample(tmp) == expected)
@@ -142,7 +142,7 @@ class ReservoirStreamSpec extends AnyFunSuite with SparkSuite {
 
   test("growth bound: state is O(n) rows per batch, not O(batch)") {
     val docs = Tables.documents(spark, Sf0001)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-res-bound").toString
+    val tmp = tempDir("graft-res-bound")
     (0 until 4).foreach { i =>
       ReservoirStream.applyBatch(spark,
         docs.filter(pmod(col("doc_id"), lit(4)) === i), i.toLong, tmp, N)

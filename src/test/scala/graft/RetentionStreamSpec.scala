@@ -10,7 +10,7 @@ class RetentionStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-ret-stream").toString
+    tempDir("graft-ret-stream")
 
   private def events = Tables.events(spark, Sf0001)
 

@@ -252,7 +252,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
   test("passage hybrid: fused output = hand-fused RRF over the two " +
        "independently served pid-grain legs") {
     import graft.streaming.{LexStatsStream, PassageLex}
-    val state = java.nio.file.Files.createTempDirectory("passagehy").toString
+    val state = tempDir("passagehy")
     val docs = Tables.documents(spark, Sf0001).select("doc_id", "text")
     PassageLex.applyBatch(spark, docs, 0L, state)
     val out = Retrieval.hybridPassageTopk(spark, Sf0001, state)
@@ -286,7 +286,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
   test("batched indexed lexical leg (one stats lookup + one postings pass) " +
        "= per-query composed leg, list for list") {
     import graft.streaming.{LexStatsStream, PassageLex}
-    val state = java.nio.file.Files.createTempDirectory("lexbatch").toString
+    val state = tempDir("lexbatch")
     PassageLex.applyBatch(spark,
       Tables.documents(spark, Sf0001).select("doc_id", "text"), 0L, state)
     val batched = LexStatsStream.bm25RankedPerQueryIndexed(
@@ -302,7 +302,7 @@ class RetrievalSpec extends AnyFunSuite with SparkSuite {
 
   test("indexed passage dense leg = brute-force leg RESTRICTED to the " +
        "probed inverted lists; candidate read partition-prunes") {
-    val idx = java.nio.file.Files.createTempDirectory("passagedense").toString
+    val idx = tempDir("passagedense")
     Retrieval.buildPassageDenseIndex(spark, Sf0001, idx)
     val cents = Retrieval.passageDenseCentroids(spark, Sf0001)
     // probing every list recovers the brute-force ranking exactly

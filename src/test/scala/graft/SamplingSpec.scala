@@ -222,7 +222,7 @@ class SamplingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("writeShuffled materializes the assignment order: one sorted file per shard") {
-    val out = java.nio.file.Files.createTempDirectory("graft-shuf").toString
+    val out = tempDir("graft-shuf")
     val docs = Tables.documents(spark, Sf0001)
     Sampling.writeShuffled(docs, out)
     val assign = Sampling.shuffledExportAssignOf(docs)

@@ -78,7 +78,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   test("incrementally-appended assignment table answers IVF queries like one-shot") {
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-inc").toString
+    val dir = tempDir("graft-ivf-inc")
     val path = s"$dir/assigned"
     // index built in two ingest batches
     Similarity.appendAssigned(e.filter(col("vec_id") < 250), cents, path)
@@ -94,7 +94,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   test("cluster-partitioned index: candidate scan partition-prunes to the probed lists") {
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-part").toString + "/idx"
+    val path = tempDir("graft-ivf-part") + "/idx"
     Similarity.buildIndex(e, cents, path)
     val probes = Seq(0L, 1L, 2L)
     val indexed = Similarity.ivfTopKIndexed(spark, path, cents, probes, 3, nprobe = 3)
@@ -115,7 +115,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   test("client-carried query vectors answer identically to the id-lookup form") {
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf-vec").toString + "/idx"
+    val path = tempDir("graft-ivf-vec") + "/idx"
     Similarity.buildIndex(e, cents, path)
     val probeIds = Seq(0L, 1L, 2L)
     val vecs = e.filter(col("vec_id").isin(probeIds: _*))
@@ -139,7 +139,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   test("quantized index: 3x+ smaller, same list membership, recall@10 >= 0.9") {
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-q").toString
+    val tmp = tempDir("graft-ivf-q")
     Similarity.buildIndex(e, cents, s"$tmp/exact")
     Similarity.buildIndexQuantized(e, cents, s"$tmp/quant")
     def size(p: String): Long = {
@@ -179,7 +179,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   test("two-stage rerank: exhaustive pool equals the exact indexed query; 4k pool holds recall") {
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-rr").toString
+    val tmp = tempDir("graft-ivf-rr")
     Similarity.buildIndex(e, cents, s"$tmp/exact")
     Similarity.buildIndexQuantized(e, cents, s"$tmp/quant")
     val probeIds = (0L until 20L).toSeq
@@ -217,7 +217,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   test("incrementally-appended quantized index equals a one-shot rebuild") {
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-qinc").toString
+    val tmp = tempDir("graft-ivf-qinc")
     Similarity.appendAssignedQuantized(e.filter(col("vec_id") < 250), cents, s"$tmp/inc")
     Similarity.appendAssignedQuantized(e.filter(col("vec_id") >= 250), cents, s"$tmp/inc")
     Similarity.buildIndexQuantized(e, cents, s"$tmp/full")
@@ -240,7 +240,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
   test("streaming index maintenance: streamed-in batches answer IVF like one-shot") {
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-stream").toString
+    val tmp = tempDir("graft-ivf-stream")
     val inDir = s"$tmp/in"; val idx = s"$tmp/assigned"; val ckpt = s"$tmp/ckpt"
     Similarity.saveCentroids(spark, cents, s"$tmp/centroids")
     e.filter(col("vec_id") < 250).write.mode("append").parquet(inDir)
@@ -282,7 +282,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     import graft.streaming.EmbeddingIndexStream
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-compact").toString
+    val tmp = tempDir("graft-ivf-compact")
     val idx = s"$tmp/assigned"
     val parts = (0 until 5).map(i => e.filter(pmod(col("vec_id"), lit(5)) === i))
     parts.zipWithIndex.foreach { case (b, i) =>
@@ -326,10 +326,38 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     assert(answers() == oneShot)
   }
 
+  test("index compaction crash inside the swap: liveIndex in the window returns every row") {
+    import graft.streaming.EmbeddingIndexStream
+    import java.nio.file.{Files, Paths}
+    val e = Tables.embeddings(spark, Sf0001)
+    val cents = Similarity.centroidSeq(e)
+    val all = e.select("vec_id").as[Long].collect().toSet
+    // two crash layouts: the fold swapped out beside a batch it had not
+    // folded yet, and the all-folded layout of the compaction test above
+    for (unfoldedTail <- Seq(true, false)) {
+      val idx = tempDir("graft-ivf-compact-crash") + "/assigned"
+      (0 until 5).foreach { i =>
+        EmbeddingIndexStream.applyBatch(
+          e.filter(pmod(col("vec_id"), lit(5)) === i), i, cents, idx)
+      }
+      val (tail, side) = (Paths.get(s"$idx/batch=4"), Paths.get(s"$idx.batch=4"))
+      if (unfoldedTail)
+        org.apache.commons.io.FileUtils.copyDirectory(tail.toFile, side.toFile)
+      EmbeddingIndexStream.compactIndex(spark, idx)
+      // the crash window: batch=-1 deleted, the committed fold not renamed
+      Files.move(Paths.get(s"$idx/batch=-1"), Paths.get(s"$idx/.compact-tmp"))
+      if (unfoldedTail) Files.move(side, tail)
+      val live = EmbeddingIndexStream.liveIndex(spark, idx)
+        .select("vec_id").as[Long].collect()
+      assert(live.length == all.size && live.toSet == all,
+        s"unfoldedTail=$unfoldedTail: ${live.length} of ${all.size} rows")
+    }
+  }
+
   test("trained quantizer round-trips through parquet persist/load") {
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = tempDir("graft-ivf")
     Similarity.saveCentroids(spark, cents, s"$dir/centroids.parquet")
     val loaded = Similarity.loadCentroids(spark, s"$dir/centroids.parquet")
     assert(loaded.sortBy(_._1) == cents.sortBy(_._1))
@@ -610,7 +638,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSuite {
     // the fill-from-filtered-pool pin through the quantized read
     val e = Tables.embeddings(spark, Sf0001)
     val cents = Similarity.centroidSeq(e)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ivf-fq").toString
+    val tmp = tempDir("graft-ivf-fq")
     Similarity.buildIndex(e, cents, s"$tmp/exact")
     Similarity.buildIndexQuantized(e, cents, s"$tmp/quant")
     val probeIds = Seq(0L, 1L, 2L, 3L, 4L)

@@ -21,7 +21,7 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
     .select(col("doc_id"), col("lang"), length(col("text")).cast("long").as("n"))
 
   test("csv round trip with explicit schema preserves rows and pushes filters") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-src").toString
+    val tmp = tempDir("graft-src")
     sample.write.option("header", "true").mode("overwrite").csv(s"$tmp/csv")
     val back = spark.read.schema(schema).option("header", "true").csv(s"$tmp/csv")
     assert(back.count() == sample.count())
@@ -33,7 +33,7 @@ class SourcesSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("json-lines round trip with explicit schema preserves rows") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-src").toString
+    val tmp = tempDir("graft-src")
     sample.write.mode("overwrite").json(s"$tmp/json")
     val back = spark.read.schema(schema).json(s"$tmp/json")
     assert(back.count() == sample.count())

@@ -12,7 +12,7 @@ class StateHistoryStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-scd2-stream").toString
+    tempDir("graft-scd2-stream")
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

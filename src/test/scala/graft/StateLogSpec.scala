@@ -13,7 +13,7 @@ class StateLogSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-statelog").toString
+    tempDir("graft-statelog")
 
   private def log(st: String) = new StateLog(spark, st, "cnt")
 
@@ -201,5 +201,23 @@ class StateLogSpec extends AnyFunSuite with SparkSuite {
     assert(Seq(s"$st/.tombstones/batch=3", s"$st/.lextomb/batch=3").map(files) == committed)
     assert(streaming.EmbeddingIndexStream.tombstoneIds(spark, st)
       .as[Long].collect().toSet == Set(1L, 2L))
+  }
+
+  test("one module swaps state: no rename outside StateLog and FsUtils") {
+    val owners = Set("StateLog.scala", "FsUtils.scala")
+    val swap = """renameOrThrow\(|replaceDir\(|\.rename\(""".r
+    def sources(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) sources(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val all = sources(new java.io.File("src/main/scala"))
+    assert(all.exists(_.getName == "StateLog.scala"), "src/main/scala not found")
+    val offenders = for {
+      f <- all if !owners(f.getName)
+      (line, n) <- java.nio.file.Files.readString(f.toPath).linesIterator.toSeq.zipWithIndex
+      if swap.findFirstIn(line).isDefined
+    } yield s"${f.getPath}:${n + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "swap state through StateLog.swapDir / landPartitions:\n" + offenders.mkString("\n"))
   }
 }

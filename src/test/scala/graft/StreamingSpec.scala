@@ -152,7 +152,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("file-source pipeline: stream-dedup + foreachBatch upsert is exactly-once") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val tmp = tempDir("graft-stream")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
     val schemaFrom = sample.toDF()
     // batch 1 lands
@@ -179,7 +179,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // S6 source-agnosticism: runStream is the identical dedup + partitioned
     // merge + run-log pipeline runFileStream mounts on a drop dir — here fed
     // from an in-memory source the way a Kafka reader would feed it
-    val tmp = java.nio.file.Files.createTempDirectory("graft-memstream").toString
+    val tmp = tempDir("graft-memstream")
     val outDir = s"$tmp/out"
     val mem = MemoryStream[Ev](spark)
     mem.addData(sample.take(3): _*)
@@ -207,7 +207,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // Kafka DataFrame (same shape: a streaming frame mapped to the event
     // schema), duplicate deliveries injected by id-folding dedup
     // exactly-once, and the run log records every micro-batch.
-    val tmp = java.nio.file.Files.createTempDirectory("graft-ratestream").toString
+    val tmp = tempDir("graft-ratestream")
     val src = spark.readStream.format("rate-micro-batch")
       .option("rowsPerBatch", 10)
       .option("startTimestamp", 0L)
@@ -248,7 +248,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // six day-spaced deliveries of 50 events each through the full pipeline;
     // with a 1-hour watermark each delivery expires the previous one's keys,
     // so dedup state must hover at O(one delivery), not O(all six)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-statebound").toString
+    val tmp = tempDir("graft-statebound")
     val mem = MemoryStream[Ev](spark)
     val q = EventsPipeline.runStream(spark, mem.toDF(), s"$tmp/out", s"$tmp/ckpt")
     val perBatch = 50
@@ -274,7 +274,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("incremental daily aggregate equals the batch twin across arbitrary batch splits") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-dailyagg").toString
+    val tmp = tempDir("graft-dailyagg")
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"
     val ckpt = s"$tmp/ckpt"; val aggDir = s"$tmp/agg"
     // unique events (exact redelivery only — a same-id different-value pair
@@ -316,7 +316,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   test("hour-sharded merge rewrites only batch-affected HOUR partitions") {
     // the documented hot-day mitigation: a day receiving events all day
     // must not re-merge its whole partition per batch — only touched hours
-    val tmp = java.nio.file.Files.createTempDirectory("graft-hmerge").toString
+    val tmp = tempDir("graft-hmerge")
     val outDir = s"$tmp/out"
     EventsPipeline.mergePartitioned(spark, sample.toDF(), outDir, hourShard = true)
     val h10 = new java.io.File(s"$outDir/event_date=2024-01-01/event_hour=10")
@@ -340,9 +340,9 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // crash recovery heals a nested-orphaned hour dir
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$outDir.tmp/event_date=2024-01-01"))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$outDir.parts-tmp/event_date=2024-01-01"))
     fs.rename(new org.apache.hadoop.fs.Path(s"$outDir/event_date=2024-01-01/event_hour=10"),
-      new org.apache.hadoop.fs.Path(s"$outDir.tmp/event_date=2024-01-01/event_hour=10"))
+      new org.apache.hadoop.fs.Path(s"$outDir.parts-tmp/event_date=2024-01-01/event_hour=10"))
     val b4 = Seq(Ev(8L, t("2024-01-03 08:00:00"), 6L, "click", 1.0, "{}")).toDF()
     EventsPipeline.mergePartitioned(spark, b4, outDir, hourShard = true)
     val healed = spark.read.parquet(outDir).select("event_id").as[Long].collect().sorted
@@ -350,7 +350,7 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
   }
 
   test("partition-scoped merge rewrites only batch-affected date partitions") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-pmerge").toString
+    val tmp = tempDir("graft-pmerge")
     val outDir = s"$tmp/out"
     // batch 1: events on two dates
     EventsPipeline.mergePartitioned(spark, sample.toDF(), outDir)
@@ -370,13 +370,13 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
     // day 2 grew: events 3, 4-if-present, 5 all live there
     val got = spark.read.parquet(outDir).select("event_id").as[Long].collect().sorted
     assert(got.toSeq == Seq(1L, 2L, 3L, 5L), s"got ${got.toSeq}")
-    // crash recovery: orphan a partition into .tmp (as a crash between
+    // crash recovery: orphan a partition into staging (as a crash between
     // delete and rename would), then merge again — the orphan is restored
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$outDir.tmp"))
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$outDir.parts-tmp"))
     fs.rename(new org.apache.hadoop.fs.Path(s"$outDir/event_date=2024-01-01"),
-      new org.apache.hadoop.fs.Path(s"$outDir.tmp/event_date=2024-01-01"))
+      new org.apache.hadoop.fs.Path(s"$outDir.parts-tmp/event_date=2024-01-01"))
     val b3 = Seq(Ev(6L, t("2024-01-03 08:00:00"), 6L, "click", 1.0, "{}")).toDF()
     EventsPipeline.mergePartitioned(spark, b3, outDir)
     val healed = spark.read.parquet(outDir).select("event_id").as[Long].collect().sorted

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.SubstringDedup
@@ -9,7 +8,7 @@ import graft.streaming.SubstringDedupStream
 class SubstringDedupStreamSpec extends AnyFunSuite with SparkSuite {
   import spark.implicits._
 
-  private def tmp(): String = Files.createTempDirectory("ssdstream").toString
+  private def tmp(): String = tempDir("ssdstream")
   private def docs = Tables.documents(spark, Sf0001).filter($"doc_id" < 300)
   private val L = 5
 
